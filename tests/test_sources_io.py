@@ -738,3 +738,243 @@ def test_manifest_vacuum_crash_safe_idempotent(spark, tmp_path):
             for r in T.read_snapshot(spark, root).collect()} == before
     # and a third run is a clean no-op
     assert T.vacuum_snapshots(root, keep_last=1) == []
+
+
+def _bucket_of(spark, T, keys, n_buckets):
+    """key → bucket id under the table layer's hash assignment."""
+    df = spark.createDataFrame([(k,) for k in keys], "k long")
+    return {
+        r.k: r.b
+        for r in df.select("k", T._bucket_expr("k", n_buckets).alias("b")).collect()
+    }
+
+
+def test_bucketed_merge_keeps_evolved_column_after_plain_merge(spark, tmp_path):
+    """A plain MERGE must keep a column an evolve_schema MERGE added, in
+    both carry modes: into the evolved bucket, the touched-bucket read
+    unions every footer instead of sampling a pre-evolution one (which
+    dropped column ``x`` and its value); into a bucket whose files
+    predate ``x``, the updates' ``x`` is kept because the table has it."""
+    from ucr_bigdata_snowfallproject_spark import table as T
+
+    n_buckets = 4
+    base = spark.createDataFrame(
+        [(k, f"l{k}") for k in range(40)], "doc_id long, lang string"
+    )
+    bucket = _bucket_of(spark, T, range(40), n_buckets)
+    k1, k2 = [k for k, b in bucket.items() if b == 3][:2]
+    k3 = next(k for k, b in bucket.items() if b == 0)
+    schema = "doc_id long, lang string, x int"
+    for carry in ("link", "manifest"):
+        root = str(tmp_path / carry)
+        T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=n_buckets,
+                                      carry=carry)
+        T.merge_upsert(
+            spark, root, spark.createDataFrame([(k1, "ev", 7)], schema),
+            "doc_id", evolve_schema=True,
+        )
+        # updates carry the full (evolved) schema, as the MERGE contract asks
+        T.merge_upsert(
+            spark, root, spark.createDataFrame([(k2, "plain", None)], schema),
+            "doc_id",
+        )
+        T.merge_upsert(
+            spark, root, spark.createDataFrame([(k3, "other", 5)], schema),
+            "doc_id",
+        )
+        cur = T.read_snapshot(spark, root)
+        assert cur.columns == ["doc_id", "lang", "x"], carry
+        got = {r.doc_id: (r.lang, r.x) for r in cur.collect()}
+        assert got[k1] == ("ev", 7) and got[k2] == ("plain", None), carry
+        assert got[k3] == ("other", 5), carry
+        assert len(got) == 40, carry
+
+
+def test_merge_keeps_table_column_order(spark, tmp_path):
+    """MERGE keeps the table's column order in every layout — the key
+    join used to move the key column to the front of the rewritten
+    files."""
+    from ucr_bigdata_snowfallproject_spark import table as T
+
+    base = spark.createDataFrame(
+        [(f"l{k}", k, f"s{k}") for k in range(30)],
+        "lang string, doc_id long, source string",
+    )
+    updates = spark.createDataFrame(
+        [("xx", 1, "s", False), ("en", 99990, "new", False),
+         (None, 2, None, True)],
+        "lang string, doc_id long, source string, del boolean",
+    )
+    for layout in ("cow", "link", "manifest"):
+        root = str(tmp_path / layout)
+        if layout == "cow":
+            T.create_snapshot(base, root)
+        else:
+            T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=4,
+                                          carry=layout)
+        before = T.read_snapshot(spark, root).columns
+        assert before == ["lang", "doc_id", "source"], layout
+        T.merge_upsert(spark, root, updates, "doc_id", delete_col="del")
+        cur = T.read_snapshot(spark, root)
+        assert cur.columns == before, layout
+        got = {r.doc_id: (r.lang, r.source) for r in cur.collect()}
+        assert got[1] == ("xx", "s") and got[99990] == ("en", "new"), layout
+        assert 2 not in got and len(got) == 30, layout
+
+
+def test_snapshot_read_follows_sorted_file_order(spark, tmp_path):
+    """A snapshot read lays files into partitions in sorted path order,
+    so a seeded split over it is the same on every run. Spark packs
+    files by size; with every bucket file the same size, the order among
+    them is the input order — which used to be directory listing (and
+    hash) order."""
+    import glob
+    import os
+    import shutil
+
+    from ucr_bigdata_snowfallproject_spark import table as T
+
+    base = spark.createDataFrame(
+        [(k, f"l{k}") for k in range(64)], "doc_id long, lang string"
+    )
+    for carry in ("link", "manifest"):
+        root = str(tmp_path / carry)
+        T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=8,
+                                      carry=carry)
+        files = sorted(glob.glob(os.path.join(root, "v=0", "__pbucket=*", "*.parquet")))
+        assert len(files) == 8, carry
+        # equal sizes: every bucket holds a byte copy of the first file
+        for f in files[1:]:
+            shutil.copyfile(files[0], f)
+        for crc in glob.glob(os.path.join(root, "v=0", "__pbucket=*", ".*.crc")):
+            os.remove(crc)
+        rows = (
+            T.read_snapshot(spark, root)
+            .select(
+                F.input_file_name().alias("f"),
+                F.monotonically_increasing_id().alias("pos"),
+            )
+            .groupBy("f").agg(F.min("pos").alias("first"))
+            .collect()
+        )
+        read_order = [r.f for r in sorted(rows, key=lambda r: r.first)]
+        assert [p.split(":", 1)[1].lstrip("/") for p in read_order] == [
+            f.lstrip("/") for f in files
+        ], carry
+
+
+def test_snapshot_read_of_many_files_runs_no_listing_job(spark, tmp_path):
+    """A snapshot read of more files than Spark's parallel-discovery
+    threshold (32) runs only the footer-merge job: the explicit file list
+    is listed on the driver, not by a one-task-per-file listing job (a
+    64-bucket directory read used to launch one), and the session's
+    threshold is left as it was."""
+    import glob
+    import os
+
+    from ucr_bigdata_snowfallproject_spark import table as T
+
+    jvm_sc = spark.sparkContext._jsc.sc()
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(key)
+    df = spark.range(400).selectExpr("id as doc_id", "cast(id as string) as lang")
+    cow, bucketed = str(tmp_path / "cow"), str(tmp_path / "bucketed")
+    T.create_snapshot(df, cow, n_files=40)
+    T.create_partitioned_snapshot(df, bucketed, "doc_id", n_buckets=40)
+    for root, pattern in ((cow, "*.parquet"), (bucketed, "__pbucket=*/*.parquet")):
+        assert len(glob.glob(os.path.join(root, "v=0", pattern))) == 40, root
+        jobs = int(jvm_sc.dagScheduler().nextJobId())
+        snap = T.read_snapshot(spark, root)
+        assert int(jvm_sc.dagScheduler().nextJobId()) - jobs == 1, root
+        assert snap.count() == 400, root
+    assert spark.conf.get(key) == before
+
+
+def _fragment_bucket(spark, T, root, version, bucket, extra):
+    """Make ``bucket`` of ``v=version`` hold a second data file carrying
+    the rows of ``extra`` (whose keys hash to that bucket)."""
+    import glob
+    import os
+    import shutil
+
+    tmp = root + "_extra"
+    extra.coalesce(1).write.parquet(tmp)
+    (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
+    shutil.move(part, os.path.join(root, f"v={version}", f"__pbucket={bucket}",
+                                   "part-extra.parquet"))
+    shutil.rmtree(tmp)
+    if T._read_manifest(root, version) is not None:
+        T._write_manifest(root, version, T._self_manifest(root, version))
+
+
+def test_compact_links_already_compact_buckets(spark, tmp_path):
+    """Compacting a bucketed table whose buckets are one file each
+    writes no data: every file of the new version is the previous
+    version's inode, no Spark job runs, every row survives — in both
+    carry modes. A bucket made to hold two files is the only one
+    rewritten, down to one file."""
+    import os
+
+    from ucr_bigdata_snowfallproject_spark import table as T
+
+    n_buckets = 4
+    base = spark.createDataFrame(
+        [(k, f"l{k}") for k in range(40)], "doc_id long, lang string"
+    )
+    buckets = _bucket_of(spark, T, range(40, 80), n_buckets)
+    extra = spark.createDataFrame(
+        [(k, f"e{k}") for k, b in buckets.items() if b == 2],
+        "doc_id long, lang string",
+    )
+    jvm_sc = spark.sparkContext._jsc.sc()
+
+    def next_job_id():
+        return int(jvm_sc.dagScheduler().nextJobId())
+
+    def rows(root):
+        return {(r.doc_id, r.lang) for r in T.read_snapshot(spark, root).collect()}
+
+    for carry in ("link", "manifest"):
+        root = str(tmp_path / carry)
+        T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=n_buckets,
+                                      carry=carry)
+        v1 = T.merge_upsert(
+            spark, root,
+            spark.createDataFrame([(3, "xx")], "doc_id long, lang string"),
+            "doc_id",
+        )
+        want = rows(root)
+        prev = T._manifest_or_self(root, v1)
+        assert all(len(rels) == 1 for rels in prev.values()), carry
+
+        # already compact: pure file operations
+        jobs = next_job_id()
+        v2 = T.compact_snapshot(spark, root)
+        assert next_job_id() == jobs, carry
+        assert T.latest_version(root) == v2 == v1 + 1
+        new = T._self_manifest(root, v2)
+        assert new.keys() == prev.keys(), carry
+        for d, rels in new.items():
+            assert len(rels) == 1, (carry, d)
+            assert os.path.samefile(
+                os.path.join(root, rels[0]), os.path.join(root, prev[d][0])
+            ), (carry, d)
+        if carry == "manifest":
+            assert T._read_manifest(root, v2) == new
+        assert rows(root) == want, carry
+
+        # one fragmented bucket: only it is rewritten, to one file
+        _fragment_bucket(spark, T, root, v2, 2, extra)
+        frag = T._manifest_or_self(root, v2)
+        assert len(frag["__pbucket=2"]) == 2, carry
+        want |= {(r.doc_id, r.lang) for r in extra.collect()}
+        v3 = T.compact_snapshot(spark, root)
+        after = T._manifest_or_self(root, v3)
+        assert after.keys() == frag.keys(), carry
+        for d, rels in after.items():
+            assert len(rels) == 1 and rels[0].startswith(f"v={v3}/"), (carry, d)
+            linked = os.path.samefile(
+                os.path.join(root, rels[0]), os.path.join(root, frag[d][0])
+            )
+            assert linked == (d != "__pbucket=2"), (carry, d)
+        assert rows(root) == want, carry

@@ -40,10 +40,14 @@ touched keys. Untouched buckets carry forward by one of two modes
 Per-batch cost in both modes is
 O(touched_buckets/n_buckets · table) + O(updates) instead of O(table):
 the difference between an incrementally-maintained 100 TB corpus and one
-that's rewritten nightly. Reads prune to buckets via ordinary partition
-pruning on the ``__pbucket`` directory column (link mode) or via
-driver-side manifest pruning (manifest mode — the touched-bucket scan
-reads exactly the manifest-listed files, no directory listing at all).
+that's rewritten nightly. The MERGE's touched-bucket scan prunes on the
+driver in both modes: it reads exactly the touched buckets' files (from
+the manifest, or the version's own bucket dirs in link mode), so footer
+reads are O(touched buckets) too.
+:func:`compact_snapshot` has the same shape: it rewrites only buckets
+that hold more than one data file and hard-links the rest, so its cost
+is O(fragmented buckets), and zero Spark jobs when nothing is
+fragmented. Snapshot reads take one sorted file list in both modes.
 """
 
 from __future__ import annotations
@@ -52,6 +56,7 @@ import json
 import os
 import re
 import shutil
+import threading
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +65,10 @@ from pyspark.sql import functions as F
 #: directory-partition column of the bucketed layout (internal — stripped
 #: by read_snapshot; never part of the logical schema)
 _PART_COL = "__pbucket"
+
+#: Spark lists more input paths than this with a distributed job
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_listing_conf_lock = threading.Lock()
 
 
 def snapshot_versions(root: str) -> list[int]:
@@ -151,40 +160,63 @@ def _manifest_or_self(root: str, version: int) -> dict[str, list[str]]:
     return man if man is not None else _self_manifest(root, version)
 
 
+def _version_files(root: str, version: int) -> list[str]:
+    """Root-relative data files ``v=N`` resolves to: its manifest's
+    references, else the files physically under its directory."""
+    man = _read_manifest(root, version)
+    if man is None:
+        return _self_files(root, version)
+    return [rel for files in man.values() for rel in files]
+
+
+def _read_files(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
+    """Read an explicit list of parquet data files, laid into partitions
+    in the given order, with every footer unioned (``mergeSchema``).
+
+    Each path is a file, so listing it is one status lookup; above the
+    parallel-discovery threshold (32 paths by default) Spark would still
+    run a listing job with one task per path (a 256-file read on a
+    4-core machine: 1.41 s with that job, 0.41 s without). The listing
+    happens eagerly inside ``parquet()``, so the threshold is raised for
+    that call only (the lock keeps concurrent readers from restoring
+    each other's value)."""
+    with _listing_conf_lock:
+        old = spark.conf.get(_LISTING_THRESHOLD)
+        spark.conf.set(_LISTING_THRESHOLD, str(max(len(paths), int(old))))
+        try:
+            return spark.read.option("mergeSchema", "true").parquet(*paths)
+        finally:
+            spark.conf.set(_LISTING_THRESHOLD, old)
+
+
 def read_snapshot(
     spark: SparkSession, root: str, version: int | None = None
 ) -> DataFrame:
     """Read a table snapshot — latest committed by default, or any
-    historical ``version`` (time travel). On bucketed tables the internal
-    ``__pbucket`` directory column is stripped, so both layouts read back
-    with the logical schema."""
+    historical ``version`` (time travel). Bucketed tables read their
+    bucket files directly (no ``__pbucket`` partition discovery), so both
+    layouts read back with the logical schema."""
     v = latest_version(root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no snapshots under {root}")
-    # Manifest-mode versions resolve to their referenced file list — the
-    # files may live in EARLIER versions' directories (zero-copy
-    # carry-forward); the version directory's own contents are only the
-    # buckets that version rewrote.
-    man = _read_manifest(root, v)
-    if man is not None:
-        files = [os.path.join(root, rel) for rels in man.values() for rel in rels]
-        if not files:
-            raise FileNotFoundError(
-                f"snapshot v={v} under {root} is empty (all rows deleted)"
-            )
-        df = spark.read.option("mergeSchema", "true").parquet(*files)
-    else:
-        # mergeSchema: after an evolve_schema merge on a bucketed table,
-        # the untouched (hard-linked) buckets still carry the
-        # pre-evolution file schema — without the union the reader could
-        # sample an old footer and silently drop the new column.
-        # Footer-read cost only.
-        df = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(root, f"v={v}")
+    # One sorted file list in both carry modes: manifest-mode versions
+    # resolve to their referenced files (which may live in EARLIER
+    # versions' directories — zero-copy carry-forward), link-mode and
+    # plain versions to the files physically under ``v=N``. Spark packs
+    # files into partitions by size with ties in input order, so the
+    # sort makes the row → partition layout of a snapshot read (and any
+    # seeded split over it) independent of directory listing order.
+    rels = _version_files(root, v)
+    if not rels:
+        raise FileNotFoundError(
+            f"snapshot v={v} under {root} has no data files "
+            "(vacuumed, or all rows deleted)"
         )
-    if _PART_COL in df.columns:
-        df = df.drop(_PART_COL)
-    return df
+    # mergeSchema: after an evolve_schema merge on a bucketed table, the
+    # untouched (carried) buckets still carry the pre-evolution file
+    # schema — without the union the reader could sample an old footer
+    # and silently drop the new column. Footer-read cost only.
+    return _read_files(spark, sorted(os.path.join(root, rel) for rel in rels))
 
 
 def _write_note(root: str, version: int, note: str) -> None:
@@ -241,6 +273,13 @@ def create_snapshot(df: DataFrame, root: str, n_files: int | None = None) -> int
     return _commit(df, root, v, n_files)
 
 
+def _hidden(name: str) -> bool:
+    """Spark's hidden-path rule: ``.`` names and ``_`` names that are not
+    ``col=value`` partition directories (``_SUCCESS``, ``_manifest.json``,
+    ``_note``, ``.crc`` checksums)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def _self_files(root: str, version: int) -> list[str]:
     """Root-relative data files of ``v=N`` — top-level files plus bucket
     subdir files (resolution fallback for manifest-less versions)."""
@@ -250,13 +289,13 @@ def _self_files(root: str, version: int) -> list[str]:
         return out
     for name in sorted(os.listdir(vd)):
         p = os.path.join(vd, name)
-        if name.startswith(("_", ".")):
+        if _hidden(name):
             continue
         if os.path.isdir(p):
             out.extend(
                 f"v={version}/{name}/{f}"
                 for f in sorted(os.listdir(p))
-                if not f.startswith(("_", "."))
+                if not _hidden(f)
             )
         else:
             out.append(f"v={version}/{name}")
@@ -294,12 +333,7 @@ def append_snapshot(
         return v
     cur_v = latest_version(root)
     new_v = versions[-1] + 1
-    man = _read_manifest(root, cur_v)
-    prev_files = (
-        [rel for rels in man.values() for rel in rels]
-        if man is not None
-        else _self_files(root, cur_v)
-    )
+    prev_files = _version_files(root, cur_v)
     delta = df.repartition(n_files) if n_files is not None else df
     delta.write.mode("errorifexists").parquet(os.path.join(root, f"v={new_v}"))
     new_files = _self_files(root, new_v)
@@ -360,21 +394,43 @@ def _write_partitioned(
     )
 
 
-def _link_tree(src: str, dst: str) -> None:
-    """Carry a bucket directory into the next version WITHOUT rewriting:
-    hard links (same inode → byte-identical, zero data movement), copy
-    fallback where the filesystem refuses links. On an object store this
-    step is the metadata-only manifest re-reference Iceberg/Delta do."""
-    os.makedirs(dst, exist_ok=True)
-    for name in os.listdir(src):
-        s, d = os.path.join(src, name), os.path.join(dst, name)
-        if os.path.isdir(s):
-            _link_tree(s, d)
-        else:
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
+def _carry_forward(
+    root: str,
+    prev_man: dict[str, list[str]],
+    buckets: Sequence[str],
+    version: int,
+    link: bool,
+) -> dict[str, list[str]]:
+    """Move ``buckets`` of the previous version (``prev_man``) into
+    ``v=version`` WITHOUT rewriting them; returns their manifest entries.
+    The one place that decides how an untouched bucket reaches a new
+    version. ``link=True``: hard links into the new version dir (same
+    inode → byte-identical, zero data movement; physical-copy fallback
+    where the filesystem refuses links), so the version dir is
+    self-contained. ``link=False``: a metadata-only re-reference of the
+    files where they already live — the manifest tier, zero bytes on any
+    storage."""
+    out: dict[str, list[str]] = {}
+    for d in buckets:
+        rels = prev_man[d]
+        if link:
+            dst_dir = os.path.join(root, f"v={version}", d)
+            os.makedirs(dst_dir, exist_ok=True)
+            for rel in rels:
+                src = os.path.join(root, rel)
+                crc = os.path.join(
+                    os.path.dirname(src), f".{os.path.basename(src)}.crc"
+                )
+                # the file, plus its local-filesystem checksum sidecar
+                for s in [src] + ([crc] if os.path.exists(crc) else []):
+                    dst = os.path.join(dst_dir, os.path.basename(s))
+                    try:
+                        os.link(s, dst)
+                    except OSError:
+                        shutil.copy2(s, dst)
+            rels = [f"v={version}/{d}/{os.path.basename(rel)}" for rel in rels]
+        out[d] = rels
+    return out
 
 
 def merge_upsert(
@@ -450,7 +506,9 @@ def merge_upsert(
         kept = target.join(ups.select(key), key, "left_anti")
         if dels is not None:
             kept = kept.join(dels, key, "left_anti")
-        merged = kept.unionByName(ups)
+        # the key join moves the key column to the front; restore the
+        # table's column order
+        merged = kept.unionByName(ups).select(*data_cols)
     else:
         merged = ups  # empty target: pure insert
     v = snapshot_versions(root)[-1] + 1
@@ -488,10 +546,10 @@ def _merge_upsert_partitioned(
     update/insert/delete row's bucket is in it BY CONSTRUCTION — an
     untouched bucket cannot contain an affected key, so skipping it is
     exact, not approximate); the collect is ≤ n_buckets small ints.
-    (2) Only touched buckets are read — a partition-pruned scan on the
-    ``__pbucket`` directory column in link mode, or the manifest-listed
-    files of exactly the touched buckets in manifest mode (driver-side
-    pruning, no directory listing) — and merged with the updates.
+    (2) Only touched buckets are read — exactly the files the previous
+    version resolves to for them (its manifest, or its own bucket dirs in
+    link mode): driver-side pruning, one footer per touched file — and
+    merged with the updates.
     (3) The merged rows write into the new version dir (inserted keys
     re-bucket with the same hash, so they land inside the touched set);
     untouched buckets carry forward — hard links in link mode, a
@@ -499,8 +557,6 @@ def _merge_upsert_partitioned(
     (4) Manifest/note stamp, then the marker flip commits."""
     cur_v = latest_version(root)
     new_v = snapshot_versions(root)[-1] + 1
-    src = os.path.join(root, f"v={cur_v}")
-    dst = os.path.join(root, f"v={new_v}")
 
     touched = sorted(
         r[0]
@@ -511,35 +567,43 @@ def _merge_upsert_partitioned(
         .collect()
     )
     touched_dirs = {f"{_PART_COL}={b}" for b in touched}
-    prev_man = _manifest_or_self(root, cur_v) if carry == "manifest" else None
-    # an all-rows-deleted (or bootstrap-empty) version has no parquet
-    # files to infer from — fall back to the updates' schema and merge
-    # against an empty target
-    if prev_man is not None:
-        src_files = [
-            os.path.join(root, rel)
-            for d in sorted(touched_dirs)
-            for rel in prev_man.get(d, [])
-        ]
-        try:
-            src_df = (
-                spark.read.option("mergeSchema", "true").parquet(*src_files)
-                if src_files
-                else None
-            )
-        except Exception:
-            src_df = None
-    else:
-        try:
-            src_df = spark.read.parquet(src)
-        except Exception:
-            src_df = None
+    prev_man = _manifest_or_self(root, cur_v)
+    # Only the touched buckets' files are read, in both carry modes
+    # (driver-side pruning through the manifest, or the version's own
+    # bucket dirs in link mode): footer reads and the scan stay
+    # O(touched buckets). mergeSchema: after an evolve_schema merge a
+    # touched bucket may hold pre-evolution files beside evolved ones, and
+    # a single sampled footer would drop the evolved column. An
+    # all-rows-deleted (or bootstrap-empty) version has no parquet files
+    # to infer from — fall back to the updates' schema and merge against
+    # an empty target.
+    src_files = [
+        os.path.join(root, rel)
+        for d in sorted(touched_dirs)
+        for rel in prev_man.get(d, [])
+    ]
+    try:
+        src_df = _read_files(spark, src_files) if src_files else None
+    except Exception:
+        src_df = None
+    if src_df is not None and not evolve_schema:
+        # Updates naming a column the touched buckets' files lack: an
+        # earlier evolve_schema MERGE may have added it in OTHER buckets,
+        # so the table has it. Only then pay the table-wide footer read.
+        lacking = {c for c in updates.columns if c not in src_df.columns}
+        if lacking - {delete_col}:
+            table_schema = _read_files(spark, [
+                os.path.join(root, rel) for rels in prev_man.values() for rel in rels
+            ]).schema
+            for f in table_schema.fields:
+                if f.name in lacking:
+                    src_df = src_df.withColumn(f.name, F.lit(None).cast(f.dataType))
     if evolve_schema and src_df is not None:
         src_df = _evolve(src_df, updates, delete_col)
     data_cols = [
         c
         for c in (src_df.columns if src_df is not None else updates.columns)
-        if c != _PART_COL and c != delete_col
+        if c != delete_col
     ]
     if delete_col is not None:
         flag = F.coalesce(F.col(delete_col), F.lit(False))
@@ -551,38 +615,28 @@ def _merge_upsert_partitioned(
 
     if touched:
         if src_df is not None:
-            if _PART_COL in src_df.columns:
-                # link mode: the directory scan sees ALL buckets — prune
-                # to touched via the partition column
-                target = src_df.filter(
-                    F.col(_PART_COL).isin([int(b) for b in touched])
-                ).drop(_PART_COL)
-            else:
-                # manifest mode: the file list was already pruned
-                target = src_df.select(*data_cols)
+            target = src_df.select(*data_cols)
             kept = target.join(ups.select(key), key, "left_anti")
             if dels is not None:
                 kept = kept.join(dels, key, "left_anti")
-            merged = kept.unionByName(ups)
+            # the key join moves the key column to the front; restore the
+            # table's column order
+            merged = kept.unionByName(ups).select(*data_cols)
         else:
             merged = ups  # empty target: pure insert
         _write_partitioned(merged, root, new_v, key, n_buckets)
     else:
-        os.makedirs(dst, exist_ok=True)
+        os.makedirs(os.path.join(root, f"v={new_v}"), exist_ok=True)
 
+    # Untouched buckets: hard links in link mode; in manifest mode the new
+    # manifest re-references whatever files the previous version resolved
+    # to (which may already live several versions back).
+    carried = _carry_forward(
+        root, prev_man, [d for d in prev_man if d not in touched_dirs], new_v,
+        link=carry != "manifest",
+    )
     if carry == "manifest":
-        # Untouched buckets: zero-copy — the new manifest re-references
-        # whatever files the previous version resolved to (which may
-        # already live several versions back).
-        new_man = _self_manifest(root, new_v)  # touched buckets only
-        for d, rels in prev_man.items():
-            if d not in touched_dirs and rels:
-                new_man[d] = rels
-        _write_manifest(root, new_v, new_man)
-    else:
-        for name in os.listdir(src):
-            if name.startswith(f"{_PART_COL}=") and name not in touched_dirs:
-                _link_tree(os.path.join(src, name), os.path.join(dst, name))
+        _write_manifest(root, new_v, {**_self_manifest(root, new_v), **carried})
     if commit_note is not None:
         _write_note(root, new_v, commit_note)
     _write_marker(root, new_v)
@@ -592,26 +646,46 @@ def _merge_upsert_partitioned(
 def compact_snapshot(
     spark: SparkSession, root: str, n_files: int = 8
 ) -> int:
-    """Small-file compaction: rewrite the latest snapshot into ``n_files``
-    right-sized files as a new version — same rows, fewer tasks and
-    footers for every later scan (the maintenance pass that keeps a
-    frequently-upserted table scannable). Bucketed tables re-cluster on
-    the bucket id, preserving the layout (n_files applies per shuffle, so
-    each bucket compacts to O(1) files)."""
+    """Small-file compaction: rewrite the latest snapshot into right-sized
+    files as a new version — same rows, fewer tasks and footers for every
+    later scan (the maintenance pass that keeps a frequently-upserted
+    table scannable).
+
+    Plain tables rewrite whole into ``n_files`` files. Bucketed tables
+    compact per bucket (``n_files`` does not apply): only buckets holding
+    more than one data file are read (with ``mergeSchema``) and rewritten,
+    each to one file; every other bucket is already compact and
+    hard-links into the new version unchanged (copy fallback), like the
+    untouched buckets of a link-mode MERGE. Cost is O(fragmented
+    buckets), and when nothing is fragmented the commit is driver-side
+    file operations only — no footer read, zero Spark jobs — yet it
+    still commits a new version. In both carry modes the new version is
+    self-contained: a manifest-mode compaction references only its own
+    directory, which drops every reference into older versions and makes
+    them vacuumable for free."""
     meta = table_meta(root)
     v = snapshot_versions(root)[-1] + 1
-    if meta is not None:
-        cur = read_snapshot(spark, root)
-        _write_partitioned(cur, root, v, meta["bucket_key"], meta["n_buckets"])
-        if meta.get("carry") == "manifest":
-            # compaction rewrites every bucket physically, so the new
-            # manifest is fully self-referencing — it also drops every
-            # reference into older versions, making them vacuumable for free
-            _write_manifest(root, v, _self_manifest(root, v))
-        _write_marker(root, v)
-        return v
-    cur = read_snapshot(spark, root)
-    return _commit(cur, root, v, n_files)
+    if meta is None:
+        return _commit(read_snapshot(spark, root), root, v, n_files)
+    prev_man = _manifest_or_self(root, latest_version(root))
+    fragmented = [d for d, rels in prev_man.items() if len(rels) > 1]
+    if fragmented:
+        files = sorted(
+            os.path.join(root, rel) for d in fragmented for rel in prev_man[d]
+        )
+        _write_partitioned(
+            _read_files(spark, files),
+            root, v, meta["bucket_key"], meta["n_buckets"],
+        )
+    else:
+        os.makedirs(os.path.join(root, f"v={v}"))
+    _carry_forward(
+        root, prev_man, [d for d in prev_man if d not in fragmented], v, link=True
+    )
+    if meta.get("carry") == "manifest":
+        _write_manifest(root, v, _self_manifest(root, v))
+    _write_marker(root, v)
+    return v
 
 
 def merge_additive_agg(
