@@ -3946,12 +3946,32 @@ def test_twa_exact_at_int64_overflow_boundary(spark):
     con.close()
 
 
+def _assert_links_forward(root, old, new):
+    """Every data file of ``v=old`` is the same inode under ``v=new``
+    (hard-linked, never copied); every other data file of ``v=new`` is a
+    new inode — only the delta's files were written."""
+    import os
+
+    from ucr_bigdata_snowfallproject_spark import table as T
+
+    def subs(v):
+        return {rel.split("/", 1)[1] for rel in T._self_files(root, v)}
+
+    old_subs, new_subs = subs(old), subs(new)
+    assert old_subs < new_subs
+    for sub in old_subs:
+        assert os.path.samefile(
+            os.path.join(root, f"v={old}", sub), os.path.join(root, f"v={new}", sub)
+        ), sub
+    for sub in new_subs - old_subs:
+        assert os.stat(os.path.join(root, f"v={new}", sub)).st_nlink == 1, sub
+
+
 def test_bm25_incremental_append_is_zero_copy_and_exact(spark, tmp_path):
-    """append_bm25_delta contract: tf/lens versions re-reference every
-    existing file (zero-copy manifest append — only delta files are new),
+    """append_bm25_delta contract: tf/lens versions hard-link every
+    existing file (zero-copy append — only delta files are new inodes),
     dfreq merges additively per term-bucket, and the merged index scores
     EXACTLY like a full rebuild."""
-    import json
     import os
 
     from ucr_bigdata_snowfallproject_spark import index_store
@@ -3967,20 +3987,11 @@ def test_bm25_incremental_append_is_zero_copy_and_exact(spark, tmp_path):
         base, "doc_id", "text", persist_tf=False
     )
     index_store.save_bm25_stats(tf, lens, dfreq, root)
-    v0_files = set(
-        json.load(open(os.path.join(root, "tf", "v=0", "_manifest.json")))["__data"]
-    )
     index_store.append_bm25_delta(spark, root, delta, "doc_id", "text")
 
-    # zero-copy: v1's manifest contains ALL of v0's files verbatim plus
-    # only-new delta files; nothing physical from v0 exists under v=1
-    man1 = set(
-        json.load(open(os.path.join(root, "tf", "v=1", "_manifest.json")))["__data"]
-    )
-    assert v0_files < man1
-    assert all(rel.startswith("v=1/") for rel in man1 - v0_files)
-    on_disk_v1 = set(os.listdir(os.path.join(root, "tf", "v=1")))
-    assert not any(os.path.basename(rel) in on_disk_v1 for rel in v0_files)
+    # zero-copy: every v0 posting file is v1's file by inode; only the
+    # delta's files are new
+    _assert_links_forward(os.path.join(root, "tf"), 0, 1)
 
     # exactness: merged index == full rebuild, score for score
     q = spark.createDataFrame(
@@ -4309,8 +4320,9 @@ def test_ivf_int8_partition_pruning(spark, tmp_path):
 def test_ivf_int8_append_matches_full_rebuild(spark, tmp_path):
     """index_store.append_ivf_cells: base + two chained deltas compose to
     EXACTLY the full-build inverted file (same rows), the delta versions
-    re-reference base files (zero-copy — base dir untouched), and a probe
-    over the composed view is bit-identical to the full-build probe."""
+    hard-link every earlier cell file (zero-copy — base dir untouched,
+    only delta files are new inodes), and a probe over the appended
+    version is bit-identical to the full-build probe."""
     import os
 
     from ucr_bigdata_snowfallproject_spark import index_store as ix
@@ -4333,7 +4345,9 @@ def test_ivf_int8_append_matches_full_rebuild(spark, tmp_path):
         for f in fs
     }
     v1 = ix.append_ivf_cells(sim_ops.ivf_int8_build(d1, cents), root)
+    _assert_links_forward(root, 0, 1)
     v2 = ix.append_ivf_cells(sim_ops.ivf_int8_build(d2, cents), root)
+    _assert_links_forward(root, 1, 2)
     assert (v1, v2) == (1, 2)
     # zero-copy: the base version dir is byte-for-byte untouched
     assert base_files == {
@@ -4341,7 +4355,6 @@ def test_ivf_int8_append_matches_full_rebuild(spark, tmp_path):
         for dp, _, fs in os.walk(os.path.join(root, "v=0"))
         for f in fs
     }
-    assert ix._read_ivf_compose(root, 2) == [0, 1, 2]
 
     composed = ix.load_ivf_cells(spark, root)
     full = sim_ops.ivf_int8_build(e, cents)
@@ -4420,7 +4433,7 @@ def test_keep_best_survivor_policy(spark):
 
 def test_sq8_append_matches_full_requantize(spark, tmp_path):
     """index_store.append_sq8_codes: base + delta compose (zero-copy
-    manifest append) to exactly the full corpus quantization, and a probe
+    hard-link append) to exactly the full corpus quantization, and a probe
     over the appended artifact is bit-identical to the inline two-stage
     search over the whole corpus."""
     from ucr_bigdata_snowfallproject_spark import index_store as ix
@@ -4445,16 +4458,11 @@ def test_sq8_append_matches_full_requantize(spark, tmp_path):
     assert rk(got.collect()) == rk(want.collect())
 
 
-def test_vacuum_refuses_composed_ivf_root_accepts_compacted(spark, tmp_path):
-    """ADVICE r07 / VERDICT r07 #3: vacuum_snapshots must detect a
-    _compose.json among kept versions and REFUSE to delete its live
-    member directories (a composed IVF root's earlier versions are live
-    view members, not superseded history), while a compacted root
-    (save_ivf_cells of the loaded view — self-contained) vacuums
-    normally."""
+def test_vacuum_of_appended_ivf_root_keeps_every_row(spark, tmp_path):
+    """An appended IVF version is self-contained (earlier cell files are
+    hard-linked into it), so vacuum_snapshots with keep_last=1 removes
+    every older version and load_ivf_cells still returns every row."""
     import os
-
-    import pytest
 
     from ucr_bigdata_snowfallproject_spark import index_store as ix
     from ucr_bigdata_snowfallproject_spark import table as tbl
@@ -4466,27 +4474,19 @@ def test_vacuum_refuses_composed_ivf_root_accepts_compacted(spark, tmp_path):
             e.filter(F.col("vec_id") < 8), "vec_id"
         ).select("vec_id", "codes").collect()
     ]
-    root = str(tmp_path / "composed")
+    root = str(tmp_path / "appended")
     ix.save_ivf_cells(
         sim_ops.ivf_int8_build(e.filter(F.col("vec_id") % 2 == 0), cents), root
     )
     ix.append_ivf_cells(
         sim_ops.ivf_int8_build(e.filter(F.col("vec_id") % 2 == 1), cents), root
     )
-    n_before = ix.load_ivf_cells(spark, root).count()
-    with pytest.raises(ValueError, match="composed"):
-        tbl.vacuum_snapshots(root, keep_last=1)
-    # the refusal left every member directory intact — the view still loads
-    assert os.path.isdir(os.path.join(root, "v=0"))
-    assert ix.load_ivf_cells(spark, root).count() == n_before
-
-    # compaction lifts the restriction: self-contained versions, no
-    # compose manifest referencing doomed dirs
-    root2 = str(tmp_path / "compacted")
-    ix.save_ivf_cells(ix.load_ivf_cells(spark, root), root2)       # v=0
-    ix.save_ivf_cells(ix.load_ivf_cells(spark, root), root2)       # v=1
-    assert tbl.vacuum_snapshots(root2, keep_last=1) == [0]
-    assert ix.load_ivf_cells(spark, root2).count() == n_before
+    assert tbl.vacuum_snapshots(root, keep_last=1) == [0]
+    assert not os.path.isdir(os.path.join(root, "v=0"))
+    key = lambda rows: sorted((r["vec_id"], r["__cell"]) for r in rows)
+    assert key(ix.load_ivf_cells(spark, root).collect()) == key(
+        sim_ops.ivf_int8_build(e, cents).collect()
+    )
 
 
 def test_eval_ranking_ignores_malformed_ranks(spark):

@@ -301,7 +301,12 @@ def test_merge_additive_agg_hand_case(spark, tmp_path):
 def test_vacuum_keeps_latest_readable_via_hard_links(spark, tmp_path):
     """VACUUM: old versions delete, yet the kept version stays fully
     readable — its carried-forward files are hard links, so the inodes
-    survive removal of the directories that first wrote them."""
+    survive removal of the directories that first wrote them. Before the
+    vacuum every version time-travels; after it a second MERGE and a
+    compaction keep composing, and the compaction's files all live under
+    its own ``v=N``."""
+    import os
+
     import pytest
 
     from ucr_bigdata_snowfallproject_spark import table as T
@@ -311,22 +316,165 @@ def test_vacuum_keeps_latest_readable_via_hard_links(spark, tmp_path):
     ).filter(F.col("doc_id") < 200)
     root = str(tmp_path / "bucketed")
     T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=8)
-    for i, (k, lang) in enumerate([(7, "xx"), (15, "yy")]):
+    v0_rows = {(r.doc_id, r.lang) for r in base.collect()}
+    for k, lang, dele in [(7, "xx", False), (15, "yy", False), (3, None, True)]:
         ups = spark.createDataFrame(
-            [(k, lang, "s", False)],
+            [(k, lang, "s", dele)],
             "doc_id long, lang string, source string, del boolean",
         )
         T.merge_upsert(spark, root, ups, "doc_id", delete_col="del")
     want = {(r.doc_id, r.lang) for r in T.read_snapshot(spark, root).collect()}
+    assert {(7, "xx"), (15, "yy")} <= want and 3 not in {d for d, _ in want}
+    # time travel after MERGE: v0 reads as it was written
+    assert {(r.doc_id, r.lang)
+            for r in T.read_snapshot(spark, root, version=0).collect()} == v0_rows
 
     removed = T.vacuum_snapshots(root, keep_last=1)
-    assert removed == [0, 1] and T.latest_version(root) == 2
+    assert removed == [0, 1, 2] and T.latest_version(root) == 3
     got = {(r.doc_id, r.lang) for r in T.read_snapshot(spark, root).collect()}
     assert got == want  # every hard-linked file still alive
+    assert T.vacuum_snapshots(root, keep_last=1) == []  # re-run: no-op
     with pytest.raises(Exception):
         T.read_snapshot(spark, root, version=0).collect()
     with pytest.raises(ValueError):
         T.vacuum_snapshots(root, keep_last=0)
+
+    # a second MERGE after vacuum keeps composing
+    ups2 = spark.createDataFrame(
+        [(7, "zz", "s", False)], "doc_id long, lang string, source string, del boolean"
+    )
+    T.merge_upsert(spark, root, ups2, "doc_id", delete_col="del")
+    want = (want - {(7, "xx")}) | {(7, "zz")}
+    assert {(r.doc_id, r.lang) for r in T.read_snapshot(spark, root).collect()} == want
+
+    # compaction output lives entirely under its own v=N
+    vc = T.compact_snapshot(spark, root)
+    files = T._self_files(root, vc)
+    assert files and all(rel.startswith(f"v={vc}/") for rel in files)
+    assert all(os.path.isfile(os.path.join(root, rel)) for rel in files)
+    assert T.vacuum_snapshots(root, keep_last=1) == [3, 4]
+    assert {(r.doc_id, r.lang) for r in T.read_snapshot(spark, root).collect()} == want
+
+
+def test_append_snapshot_vacuum_keeps_every_row(spark, tmp_path):
+    """Three appends, then VACUUM down to the latest: every appended row
+    is still readable — each append hard-links the previous version's
+    files into its own directory instead of referencing them, and only
+    the delta's files are new inodes."""
+    import os
+
+    from ucr_bigdata_snowfallproject_spark import table as T
+
+    root = str(tmp_path / "log")
+    batches = [
+        spark.createDataFrame([(b * 10 + i, f"b{b}") for i in range(10)],
+                              "id long, tag string")
+        for b in range(3)
+    ]
+    for b, df in enumerate(batches):
+        v = T.append_snapshot(df, root, n_files=2, note=f"batch-{b}")
+        assert v == b and T.version_note(root, v) == f"batch-{b}"
+        if b:
+            prev = T._self_files(root, v - 1)
+            for rel in prev:
+                assert os.path.samefile(
+                    os.path.join(root, rel),
+                    os.path.join(root, f"v={v}", rel.split("/", 1)[1]),
+                ), rel
+            assert len(T._self_files(root, v)) == len(prev) + 2
+    assert T.read_snapshot(spark, root, version=1).count() == 20
+    assert T.vacuum_snapshots(root, keep_last=1) == [0, 1]
+    got = sorted((r.id, r.tag) for r in T.read_snapshot(spark, root).collect())
+    assert got == sorted((b * 10 + i, f"b{b}") for b in range(3) for i in range(10))
+
+
+def test_merge_over_unreadable_target_raises_and_commits_nothing(spark, tmp_path):
+    """A MERGE whose target files cannot be read must fail, not treat the
+    target as empty: on a COW table, a bucketed table and an additive
+    rollup, a corrupt touched file raises, ``_latest`` stays put and no
+    new version is committed (silent "empty target" fallback used to
+    commit a version holding only the update rows)."""
+    import glob
+    import os
+
+    import pytest
+
+    from ucr_bigdata_snowfallproject_spark import table as T
+
+    base = spark.createDataFrame(
+        [(k, f"l{k}", 1) for k in range(100)], "doc_id long, lang string, n long"
+    )
+    ups = spark.createDataFrame([(5, "xx", 1)], "doc_id long, lang string, n long")
+    (b5,) = _bucket_of(spark, T, [5], 4).values()
+
+    def corrupt(pattern):
+        files = glob.glob(pattern)
+        assert files, pattern
+        for f in files:
+            with open(f, "r+b") as fh:
+                fh.truncate(16)
+            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+
+    cases = {
+        "cow": lambda root: T.merge_upsert(spark, root, ups, "doc_id"),
+        "bucketed": lambda root: T.merge_upsert(spark, root, ups, "doc_id"),
+        "additive": lambda root: T.merge_additive_agg(
+            spark, root, ups.select("doc_id", "n"), "doc_id", ["n"]
+        ),
+    }
+    for layout, merge in cases.items():
+        root = str(tmp_path / layout)
+        if layout == "cow":
+            T.create_snapshot(base, root)
+            corrupt(os.path.join(root, "v=0", "*.parquet"))
+        else:
+            T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=4)
+            corrupt(os.path.join(root, "v=0", f"__pbucket={b5}", "*.parquet"))
+        with pytest.raises(Exception):
+            merge(root)
+        assert T.latest_version(root) == 0, layout
+        assert T._self_files(root, 1) == [], layout
+
+
+def test_link_forward_never_overwrites(tmp_path, monkeypatch):
+    """The carry-forward helper copies only where the filesystem refuses
+    links (cross-device, unsupported, link-count limit); any other link
+    error — a name collision above all — raises and leaves the existing
+    destination's bytes unchanged."""
+    import errno
+    import os
+
+    import pytest
+
+    from ucr_bigdata_snowfallproject_spark import table as T
+
+    root = tmp_path / "t"
+    (root / "v=0" / "__pbucket=1").mkdir(parents=True)
+    (root / "v=1" / "__pbucket=1").mkdir(parents=True)
+    (root / "v=0" / "__pbucket=1" / "part-0.parquet").write_bytes(b"old data")
+    (root / "v=0" / "__pbucket=1" / ".part-0.parquet.crc").write_bytes(b"crc")
+    dst = root / "v=1" / "__pbucket=1" / "part-0.parquet"
+    dst.write_bytes(b"fresh delta")
+    rels = ["v=0/__pbucket=1/part-0.parquet"]
+
+    def refuse(code):
+        def link(src, dst):
+            raise OSError(code, os.strerror(code), src, None, dst)
+        return link
+
+    monkeypatch.setattr(os, "link", refuse(errno.EEXIST))
+    with pytest.raises(FileExistsError):
+        T._link_forward(str(root), rels, 1)
+    assert dst.read_bytes() == b"fresh delta"
+
+    monkeypatch.setattr(os, "link", refuse(errno.EXDEV))
+    T._link_forward(str(root), rels, 2)
+    copied = root / "v=2" / "__pbucket=1"
+    assert (copied / "part-0.parquet").read_bytes() == b"old data"
+    assert (copied / ".part-0.parquet.crc").read_bytes() == b"crc"
+    assert os.stat(copied / "part-0.parquet").st_nlink == 1
 
 
 def test_xml_roundtrip(spark, tmp_path):
@@ -583,163 +731,6 @@ def test_read_fixed_width(spark, tmp_path):
     assert got == {1: ("ALPHA", 42.5), 2: ("BETA", None), 3: (None, -1.0)}
 
 
-def test_manifest_carry_forward_references_not_copies(spark, tmp_path):
-    """The object-store carry tier (VERDICT r05 #3): with carry='manifest'
-    an untouched bucket costs ZERO bytes per version — no hard link, no
-    copy, no directory entry — only a manifest re-reference into the
-    version that last wrote it. Reads resolve through the manifest;
-    semantics are pinned identical to link mode; VACUUM reference-counts
-    (still-referenced files survive removal of their birth directory,
-    unreferenced ones die)."""
-    import json
-    import os
-
-    from ucr_bigdata_snowfallproject_spark import table as T
-
-    base = load_table(spark, SF_SMOKE, "documents").select(
-        "doc_id", "lang", "source"
-    ).filter(F.col("doc_id") < 200)
-    n_buckets = 8
-    m_root, l_root = str(tmp_path / "manifested"), str(tmp_path / "linked")
-    T.create_partitioned_snapshot(base, m_root, "doc_id", n_buckets=n_buckets,
-                                  carry="manifest")
-    T.create_partitioned_snapshot(base, l_root, "doc_id", n_buckets=n_buckets)
-
-    updates = spark.createDataFrame(
-        [(7, "xx", "s", False), (7 + n_buckets, "yy", "s", False),
-         (3, None, None, True)],
-        "doc_id long, lang string, source string, del boolean",
-    )
-    touched = {
-        r[0]
-        for r in updates.select(
-            T._bucket_expr("doc_id", n_buckets).alias("b")
-        ).distinct().collect()
-    }
-    v1 = T.merge_upsert(spark, m_root, updates, "doc_id", delete_col="del")
-    T.merge_upsert(spark, l_root, updates, "doc_id", delete_col="del")
-
-    # 1) untouched buckets: REFERENCED, never duplicated — v1's dir holds
-    # only the touched buckets; the manifest points untouched buckets at
-    # the v0 files verbatim
-    v1_dir = os.path.join(m_root, f"v={v1}")
-    on_disk = {n for n in os.listdir(v1_dir) if n.startswith("__pbucket=")}
-    assert on_disk == {f"__pbucket={b}" for b in touched}
-    man1 = json.load(open(os.path.join(v1_dir, "_manifest.json")))
-    man0 = json.load(open(os.path.join(m_root, "v=0", "_manifest.json")))
-    for bucket, rels in man1.items():
-        b = int(bucket.split("=")[1])
-        if b in touched:
-            assert all(rel.startswith(f"v={v1}/") for rel in rels), bucket
-        else:
-            assert rels == man0[bucket], bucket  # same files, zero bytes
-            assert all(rel.startswith("v=0/") for rel in rels), bucket
-
-    # 2) read semantics identical to link mode, current and time-travel
-    cur_m = {(r.doc_id, r.lang) for r in T.read_snapshot(spark, m_root).collect()}
-    cur_l = {(r.doc_id, r.lang) for r in T.read_snapshot(spark, l_root).collect()}
-    assert cur_m == cur_l
-    assert (7, "xx") in cur_m and (7 + n_buckets, "yy") in cur_m
-    assert 3 not in {d for d, _ in cur_m}
-    old_m = {(r.doc_id, r.lang)
-             for r in T.read_snapshot(spark, m_root, version=0).collect()}
-    old_l = {(r.doc_id, r.lang)
-             for r in T.read_snapshot(spark, l_root, version=0).collect()}
-    assert old_m == old_l and (7, "xx") not in old_m
-
-    # 3) VACUUM reference-counts: v0 dir goes away, but files v1 still
-    # references are relocated (renamed, not copied) and v1 stays whole
-    removed = T.vacuum_snapshots(m_root, keep_last=1)
-    assert removed == [0] and not os.path.isdir(os.path.join(m_root, "v=0"))
-    assert {(r.doc_id, r.lang)
-            for r in T.read_snapshot(spark, m_root).collect()} == cur_m
-    man1b = json.load(open(os.path.join(v1_dir, "_manifest.json")))
-    assert all(
-        rel.startswith(f"v={v1}/") for rels in man1b.values() for rel in rels
-    )  # every reference now resolves inside the kept version
-    import pytest
-
-    with pytest.raises(Exception):
-        T.read_snapshot(spark, m_root, version=0).collect()
-
-    # 4) a second merge after vacuum keeps composing
-    ups2 = spark.createDataFrame(
-        [(7, "zz", "s", False)], "doc_id long, lang string, source string, del boolean"
-    )
-    T.merge_upsert(spark, m_root, ups2, "doc_id", delete_col="del")
-    assert {r.lang for r in T.read_snapshot(spark, m_root)
-            .filter(F.col("doc_id") == 7).collect()} == {"zz"}
-
-    # 5) compaction rewrites fully self-referencing
-    vc = T.compact_snapshot(spark, m_root)
-    manc = json.load(open(os.path.join(m_root, f"v={vc}", "_manifest.json")))
-    assert all(
-        rel.startswith(f"v={vc}/") for rels in manc.values() for rel in rels
-    )
-    assert {(r.doc_id, r.lang) for r in T.read_snapshot(spark, m_root).collect()} \
-        == (cur_m - {(7, "xx")}) | {(7, "zz")}
-
-
-def test_manifest_vacuum_crash_safe_idempotent(spark, tmp_path):
-    """ADVICE r06 (medium): manifest-mode VACUUM must be crash-safe —
-    rescue files by LINK first, rewrite kept manifests, delete doomed
-    dirs LAST. Simulate a run that died after rescuing every
-    still-referenced file but before any manifest rewrite or deletion:
-    the table must still read through the OLD manifest (sources are
-    never unlinked early), and a re-run must complete idempotently
-    (reusing the already-rescued destinations instead of colliding)."""
-    import json
-    import os
-
-    from ucr_bigdata_snowfallproject_spark import table as T
-
-    base = load_table(spark, SF_SMOKE, "documents").select(
-        "doc_id", "lang", "source"
-    ).filter(F.col("doc_id") < 100)
-    n_buckets = 4
-    root = str(tmp_path / "crashy")
-    T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=n_buckets,
-                                  carry="manifest")
-    ups = spark.createDataFrame(
-        [(1, "xx", "s", False)],
-        "doc_id long, lang string, source string, del boolean",
-    )
-    v1 = T.merge_upsert(spark, root, ups, "doc_id", delete_col="del")
-    before = {(r.doc_id, r.lang) for r in T.read_snapshot(spark, root).collect()}
-
-    # --- replay the crashed run's rescue phase by hand: link every v0
-    # file the kept manifest references into v1, touch NOTHING else ---
-    man1_path = os.path.join(root, f"v={v1}", "_manifest.json")
-    man1 = json.load(open(man1_path))
-    n_rescued = 0
-    for bucket, rels in man1.items():
-        for rel in rels:
-            if not rel.startswith("v=0/"):
-                continue
-            dst = os.path.join(root, f"v={v1}", bucket, os.path.basename(rel))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if not os.path.exists(dst):
-                os.link(os.path.join(root, rel), dst)
-                n_rescued += 1
-    assert n_rescued > 0  # v1 really did reference v0 files
-
-    # crash point: old manifest untouched, sources intact → table whole
-    assert {(r.doc_id, r.lang)
-            for r in T.read_snapshot(spark, root).collect()} == before
-
-    # re-run completes: reuses the rescued links, rewrites, then deletes
-    removed = T.vacuum_snapshots(root, keep_last=1)
-    assert removed == [0] and not os.path.isdir(os.path.join(root, "v=0"))
-    man1b = json.load(open(man1_path))
-    assert all(
-        rel.startswith(f"v={v1}/") for rels in man1b.values() for rel in rels
-    )
-    assert {(r.doc_id, r.lang)
-            for r in T.read_snapshot(spark, root).collect()} == before
-    # and a third run is a clean no-op
-    assert T.vacuum_snapshots(root, keep_last=1) == []
-
-
 def _bucket_of(spark, T, keys, n_buckets):
     """key → bucket id under the table layer's hash assignment."""
     df = spark.createDataFrame([(k,) for k in keys], "k long")
@@ -750,8 +741,8 @@ def _bucket_of(spark, T, keys, n_buckets):
 
 
 def test_bucketed_merge_keeps_evolved_column_after_plain_merge(spark, tmp_path):
-    """A plain MERGE must keep a column an evolve_schema MERGE added, in
-    both carry modes: into the evolved bucket, the touched-bucket read
+    """A plain MERGE must keep a column an evolve_schema MERGE added: into
+    the evolved bucket, the touched-bucket read
     unions every footer instead of sampling a pre-evolution one (which
     dropped column ``x`` and its value); into a bucket whose files
     predate ``x``, the updates' ``x`` is kept because the table has it."""
@@ -765,29 +756,27 @@ def test_bucketed_merge_keeps_evolved_column_after_plain_merge(spark, tmp_path):
     k1, k2 = [k for k, b in bucket.items() if b == 3][:2]
     k3 = next(k for k, b in bucket.items() if b == 0)
     schema = "doc_id long, lang string, x int"
-    for carry in ("link", "manifest"):
-        root = str(tmp_path / carry)
-        T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=n_buckets,
-                                      carry=carry)
-        T.merge_upsert(
-            spark, root, spark.createDataFrame([(k1, "ev", 7)], schema),
-            "doc_id", evolve_schema=True,
-        )
-        # updates carry the full (evolved) schema, as the MERGE contract asks
-        T.merge_upsert(
-            spark, root, spark.createDataFrame([(k2, "plain", None)], schema),
-            "doc_id",
-        )
-        T.merge_upsert(
-            spark, root, spark.createDataFrame([(k3, "other", 5)], schema),
-            "doc_id",
-        )
-        cur = T.read_snapshot(spark, root)
-        assert cur.columns == ["doc_id", "lang", "x"], carry
-        got = {r.doc_id: (r.lang, r.x) for r in cur.collect()}
-        assert got[k1] == ("ev", 7) and got[k2] == ("plain", None), carry
-        assert got[k3] == ("other", 5), carry
-        assert len(got) == 40, carry
+    root = str(tmp_path / "t")
+    T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=n_buckets)
+    T.merge_upsert(
+        spark, root, spark.createDataFrame([(k1, "ev", 7)], schema),
+        "doc_id", evolve_schema=True,
+    )
+    # updates carry the full (evolved) schema, as the MERGE contract asks
+    T.merge_upsert(
+        spark, root, spark.createDataFrame([(k2, "plain", None)], schema),
+        "doc_id",
+    )
+    T.merge_upsert(
+        spark, root, spark.createDataFrame([(k3, "other", 5)], schema),
+        "doc_id",
+    )
+    cur = T.read_snapshot(spark, root)
+    assert cur.columns == ["doc_id", "lang", "x"]
+    got = {r.doc_id: (r.lang, r.x) for r in cur.collect()}
+    assert got[k1] == ("ev", 7) and got[k2] == ("plain", None)
+    assert got[k3] == ("other", 5)
+    assert len(got) == 40
 
 
 def test_merge_keeps_table_column_order(spark, tmp_path):
@@ -805,13 +794,12 @@ def test_merge_keeps_table_column_order(spark, tmp_path):
          (None, 2, None, True)],
         "lang string, doc_id long, source string, del boolean",
     )
-    for layout in ("cow", "link", "manifest"):
+    for layout in ("cow", "bucketed"):
         root = str(tmp_path / layout)
         if layout == "cow":
             T.create_snapshot(base, root)
         else:
-            T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=4,
-                                          carry=layout)
+            T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=4)
         before = T.read_snapshot(spark, root).columns
         assert before == ["lang", "doc_id", "source"], layout
         T.merge_upsert(spark, root, updates, "doc_id", delete_col="del")
@@ -837,30 +825,28 @@ def test_snapshot_read_follows_sorted_file_order(spark, tmp_path):
     base = spark.createDataFrame(
         [(k, f"l{k}") for k in range(64)], "doc_id long, lang string"
     )
-    for carry in ("link", "manifest"):
-        root = str(tmp_path / carry)
-        T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=8,
-                                      carry=carry)
-        files = sorted(glob.glob(os.path.join(root, "v=0", "__pbucket=*", "*.parquet")))
-        assert len(files) == 8, carry
-        # equal sizes: every bucket holds a byte copy of the first file
-        for f in files[1:]:
-            shutil.copyfile(files[0], f)
-        for crc in glob.glob(os.path.join(root, "v=0", "__pbucket=*", ".*.crc")):
-            os.remove(crc)
-        rows = (
-            T.read_snapshot(spark, root)
-            .select(
-                F.input_file_name().alias("f"),
-                F.monotonically_increasing_id().alias("pos"),
-            )
-            .groupBy("f").agg(F.min("pos").alias("first"))
-            .collect()
+    root = str(tmp_path / "t")
+    T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=8)
+    files = sorted(glob.glob(os.path.join(root, "v=0", "__pbucket=*", "*.parquet")))
+    assert len(files) == 8
+    # equal sizes: every bucket holds a byte copy of the first file
+    for f in files[1:]:
+        shutil.copyfile(files[0], f)
+    for crc in glob.glob(os.path.join(root, "v=0", "__pbucket=*", ".*.crc")):
+        os.remove(crc)
+    rows = (
+        T.read_snapshot(spark, root)
+        .select(
+            F.input_file_name().alias("f"),
+            F.monotonically_increasing_id().alias("pos"),
         )
-        read_order = [r.f for r in sorted(rows, key=lambda r: r.first)]
-        assert [p.split(":", 1)[1].lstrip("/") for p in read_order] == [
-            f.lstrip("/") for f in files
-        ], carry
+        .groupBy("f").agg(F.min("pos").alias("first"))
+        .collect()
+    )
+    read_order = [r.f for r in sorted(rows, key=lambda r: r.first)]
+    assert [p.split(":", 1)[1].lstrip("/") for p in read_order] == [
+        f.lstrip("/") for f in files
+    ]
 
 
 def test_snapshot_read_of_many_files_runs_no_listing_job(spark, tmp_path):
@@ -903,16 +889,13 @@ def _fragment_bucket(spark, T, root, version, bucket, extra):
     shutil.move(part, os.path.join(root, f"v={version}", f"__pbucket={bucket}",
                                    "part-extra.parquet"))
     shutil.rmtree(tmp)
-    if T._read_manifest(root, version) is not None:
-        T._write_manifest(root, version, T._self_manifest(root, version))
 
 
 def test_compact_links_already_compact_buckets(spark, tmp_path):
     """Compacting a bucketed table whose buckets are one file each
     writes no data: every file of the new version is the previous
-    version's inode, no Spark job runs, every row survives — in both
-    carry modes. A bucket made to hold two files is the only one
-    rewritten, down to one file."""
+    version's inode, no Spark job runs, every row survives. A bucket made
+    to hold two files is the only one rewritten, down to one file."""
     import os
 
     from ucr_bigdata_snowfallproject_spark import table as T
@@ -934,47 +917,43 @@ def test_compact_links_already_compact_buckets(spark, tmp_path):
     def rows(root):
         return {(r.doc_id, r.lang) for r in T.read_snapshot(spark, root).collect()}
 
-    for carry in ("link", "manifest"):
-        root = str(tmp_path / carry)
-        T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=n_buckets,
-                                      carry=carry)
-        v1 = T.merge_upsert(
-            spark, root,
-            spark.createDataFrame([(3, "xx")], "doc_id long, lang string"),
-            "doc_id",
+    root = str(tmp_path / "t")
+    T.create_partitioned_snapshot(base, root, "doc_id", n_buckets=n_buckets)
+    v1 = T.merge_upsert(
+        spark, root,
+        spark.createDataFrame([(3, "xx")], "doc_id long, lang string"),
+        "doc_id",
+    )
+    want = rows(root)
+    prev = T._bucket_files(root, v1)
+    assert all(len(rels) == 1 for rels in prev.values())
+
+    # already compact: pure file operations
+    jobs = next_job_id()
+    v2 = T.compact_snapshot(spark, root)
+    assert next_job_id() == jobs
+    assert T.latest_version(root) == v2 == v1 + 1
+    new = T._bucket_files(root, v2)
+    assert new.keys() == prev.keys()
+    for d, rels in new.items():
+        assert len(rels) == 1, d
+        assert os.path.samefile(
+            os.path.join(root, rels[0]), os.path.join(root, prev[d][0])
+        ), d
+    assert rows(root) == want
+
+    # one fragmented bucket: only it is rewritten, to one file
+    _fragment_bucket(spark, T, root, v2, 2, extra)
+    frag = T._bucket_files(root, v2)
+    assert len(frag["__pbucket=2"]) == 2
+    want |= {(r.doc_id, r.lang) for r in extra.collect()}
+    v3 = T.compact_snapshot(spark, root)
+    after = T._bucket_files(root, v3)
+    assert after.keys() == frag.keys()
+    for d, rels in after.items():
+        assert len(rels) == 1 and rels[0].startswith(f"v={v3}/"), d
+        linked = os.path.samefile(
+            os.path.join(root, rels[0]), os.path.join(root, frag[d][0])
         )
-        want = rows(root)
-        prev = T._manifest_or_self(root, v1)
-        assert all(len(rels) == 1 for rels in prev.values()), carry
-
-        # already compact: pure file operations
-        jobs = next_job_id()
-        v2 = T.compact_snapshot(spark, root)
-        assert next_job_id() == jobs, carry
-        assert T.latest_version(root) == v2 == v1 + 1
-        new = T._self_manifest(root, v2)
-        assert new.keys() == prev.keys(), carry
-        for d, rels in new.items():
-            assert len(rels) == 1, (carry, d)
-            assert os.path.samefile(
-                os.path.join(root, rels[0]), os.path.join(root, prev[d][0])
-            ), (carry, d)
-        if carry == "manifest":
-            assert T._read_manifest(root, v2) == new
-        assert rows(root) == want, carry
-
-        # one fragmented bucket: only it is rewritten, to one file
-        _fragment_bucket(spark, T, root, v2, 2, extra)
-        frag = T._manifest_or_self(root, v2)
-        assert len(frag["__pbucket=2"]) == 2, carry
-        want |= {(r.doc_id, r.lang) for r in extra.collect()}
-        v3 = T.compact_snapshot(spark, root)
-        after = T._manifest_or_self(root, v3)
-        assert after.keys() == frag.keys(), carry
-        for d, rels in after.items():
-            assert len(rels) == 1 and rels[0].startswith(f"v={v3}/"), (carry, d)
-            linked = os.path.samefile(
-                os.path.join(root, rels[0]), os.path.join(root, frag[d][0])
-            )
-            assert linked == (d != "__pbucket=2"), (carry, d)
-        assert rows(root) == want, carry
+        assert linked == (d != "__pbucket=2"), d
+    assert rows(root) == want

@@ -11,13 +11,22 @@ Runs are strictly serial: never two Spark sessions at once.
     python3 tools/perfbench_ab.py --base ../parent --change . \\
         --workload gsod_etl_gbt --workload corpus_curation --seeds 11-20
 
-For each workload and side it prints the median and quartiles of
-``spark_jobs``, ``write_amp`` and ``setup_s``, and for each metric the
-pair win count (lower is better for all three) and whether the change's
-gain is claimable: it wins at least nine tenths of the pairs and the
-medians differ by more than the base's interquartile range. A run that
-exits non-zero or reports ``correct: false`` counts as failed; its pair
-counts for neither side. ``--jsonl`` appends every run's record.
+The metrics are the ``end_to_end`` entries of the change checkout's
+``BENCHMARK.json``, each with its ``better`` direction and ``bound``.
+For each workload and side it prints every metric's median and
+quartiles, and per metric:
+
+- the pair win count and whether the change's gain is claimable: it
+  wins at least nine tenths of the pairs and the medians differ by more
+  than the base's interquartile range;
+- a no-regression verdict: ``within bound`` (the change's median is no
+  worse than the base's by more than ``bound`` of it), ``worse``, or
+  ``unresolved`` (the base's IQR is wider than ``bound`` of its median
+  and not every change run is better than every base run).
+
+A run that exits non-zero or reports ``correct: false`` counts as
+failed; its pair counts for neither side. ``--jsonl`` appends every
+run's record.
 """
 
 from __future__ import annotations
@@ -30,7 +39,6 @@ import subprocess
 import sys
 import time
 
-METRICS = ("spark_jobs", "write_amp", "setup_s")
 SIDES = ("base", "change")
 
 
@@ -43,10 +51,20 @@ def parse_seeds(spec: str) -> list[int]:
     return out
 
 
+def _benchmark(checkout: str) -> dict:
+    with open(os.path.join(checkout, "BENCHMARK.json")) as fh:
+        return json.load(fh)
+
+
 def run_seconds(checkout: str) -> float:
     """The benchmark's warm-window length, as ``BENCHMARK.json`` sets it."""
-    with open(os.path.join(checkout, "BENCHMARK.json")) as fh:
-        return float(json.load(fh)["run_seconds"])
+    return float(_benchmark(checkout)["run_seconds"])
+
+
+def end_to_end(checkout: str) -> list[dict]:
+    """The gated end-to-end metrics (``name``, ``better``, ``bound``), as
+    ``BENCHMARK.json`` declares them."""
+    return _benchmark(checkout)["end_to_end"]
 
 
 def run_one(checkout: str, workload: str, seed: int, seconds: float) -> dict:
@@ -77,12 +95,26 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def report(workload: str, pairs: list[dict[str, dict]]) -> None:
+def verdict(base: list[float], change: list[float], better: str, bound: float) -> str:
+    """No-regression verdict of one metric on one workload: ``within
+    bound``, ``worse``, or ``unresolved`` when the base's own spread is
+    wider than the bound and the change does not beat it outright."""
+    sign = 1 if better == "lower" else -1  # sign * value: lower is better
+    q1, bmed, q3 = quartiles(base)
+    beats_all = max(sign * c for c in change) < min(sign * b for b in base)
+    if q3 - q1 > bound * abs(bmed) and not beats_all:
+        return "unresolved"
+    worse_by = sign * (quartiles(change)[1] - bmed)
+    return "within bound" if worse_by <= bound * abs(bmed) else "worse"
+
+
+def report(workload: str, pairs: list[dict[str, dict]], metrics: list[dict]) -> None:
     ok = [p for p in pairs if all(p[s]["correct"] for s in SIDES)]
     failed = {s: sum(not p[s]["correct"] for p in pairs) for s in SIDES}
     print(f"## {workload}: {len(pairs)} pairs, {len(ok)} with both sides correct, "
           f"failed runs base={failed['base']} change={failed['change']}")
-    for m in METRICS:
+    for spec in metrics:
+        m, sign = spec["name"], 1 if spec["better"] == "lower" else -1
         vals = {s: [p[s]["metrics"][m] for p in ok if m in p[s]["metrics"]] for s in SIDES}
         if not all(vals.values()):
             print(f"{m}: no samples")
@@ -95,14 +127,16 @@ def report(workload: str, pairs: list[dict[str, dict]]) -> None:
             if not all(p[s]["correct"] and m in p[s]["metrics"] for s in SIDES):
                 continue
             b, c = p["base"]["metrics"][m], p["change"]["metrics"][m]
-            wins += c < b
+            wins += sign * c < sign * b
             ties += c == b
         q1, bmed, q3 = quartiles(vals["base"])
-        gap = bmed - quartiles(vals["change"])[1]
+        gap = sign * (bmed - quartiles(vals["change"])[1])
         claim = wins >= 0.9 * len(pairs) and gap > q3 - q1
         print(f"{m} change wins {wins}/{len(pairs)} pairs (ties {ties}); "
               f"median gap {gap:.6g} vs base IQR {q3 - q1:.6g}; "
-              f"gain claimable: {'yes' if claim else 'no'}")
+              f"gain claimable: {'yes' if claim else 'no'}; "
+              f"no-regression (bound {spec['bound']:g}): "
+              f"{verdict(vals['base'], vals['change'], spec['better'], spec['bound'])}")
 
 
 def main(argv=None) -> int:
@@ -116,6 +150,7 @@ def main(argv=None) -> int:
 
     checkouts = {"base": os.path.abspath(args.base), "change": os.path.abspath(args.change)}
     seconds = run_seconds(checkouts["change"])
+    metrics = end_to_end(checkouts["change"])
     failures = 0
     for workload in args.workload:
         pairs = []
@@ -127,14 +162,15 @@ def main(argv=None) -> int:
                 rec["side"] = side
                 pair[side] = rec
                 failures += not rec["correct"]
-                shown = " ".join(f"{m}={rec['metrics'].get(m, float('nan')):.6g}" for m in METRICS)
+                shown = " ".join(f"{m['name']}={rec['metrics'].get(m['name'], float('nan')):.6g}"
+                                 for m in metrics)
                 print(f"# {workload} seed={seed} {side}: correct={rec['correct']} {shown} "
                       f"wall={rec['wall_s']:.1f}s", flush=True)
                 if args.jsonl:
                     with open(args.jsonl, "a") as fh:
                         fh.write(json.dumps(rec) + "\n")
             pairs.append(pair)
-        report(workload, pairs)
+        report(workload, pairs, metrics)
     return 1 if failures else 0
 
 

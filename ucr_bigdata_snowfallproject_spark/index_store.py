@@ -123,28 +123,25 @@ def append_ivf_cells(
     cells_delta: DataFrame, root: str
 ) -> int:
     """Incrementally extend a persisted inverted file with NEW vectors —
-    O(batch), never O(corpus): the delta's cell assignments (from
+    O(batch) bytes, never O(corpus): the delta's cell assignments (from
     :func:`~.operators.similarity.ivf_int8_build` over the batch with the
-    SAME centroid codes) land in a new version directory, and a compose
-    manifest (``_compose.json``, underscore-hidden from parquet readers)
-    re-references every earlier member directory — existing cell files
-    are never rewritten or copied. Because int8 cell assignment is
-    per-row deterministic, append == full rebuild row-for-row, so the
-    incremental artifact shares the full build's SQL oracle.
+    SAME centroid codes) land in a new version directory as ``__cell=K/``
+    files, and every cell file of the previous version hard-links in
+    beside them (``table._link_forward``) — existing cell files are never
+    rewritten or copied, and the new version is a complete, self-contained
+    inverted file. Because int8 cell assignment is per-row deterministic,
+    append == full rebuild row-for-row, so the incremental artifact shares
+    the full build's SQL oracle.
 
     Contract: delta ids must be NEW (same rule as ``append_bm25_delta``).
-    Compact a long compose chain via
-    ``save_ivf_cells(load_ivf_cells(...), new_root)`` — and do NOT
-    ``vacuum_snapshots`` a composed root directly: earlier versions are
-    live members of the latest view, not superseded history."""
-    import json
+    Old versions stay time-travelable until ``vacuum_snapshots`` removes
+    them; the kept versions hold links to every file they need."""
     import os
 
     versions = snapshot_table.snapshot_versions(root)
     if not versions:
         raise FileNotFoundError(f"no snapshots under {root}")
     latest = snapshot_table.latest_version(root)
-    prev = _read_ivf_compose(root, latest)
     v = versions[-1] + 1
     from pyspark.sql import functions as F
 
@@ -154,22 +151,11 @@ def append_ivf_cells(
         .partitionBy("__cell")
         .parquet(os.path.join(root, f"v={v}"))
     )
-    with open(os.path.join(root, f"v={v}", "_compose.json"), "w") as fh:
-        json.dump({"includes": [*prev, v]}, fh)
+    snapshot_table._link_forward(
+        root, snapshot_table._self_files(root, latest), v
+    )
     snapshot_table._write_marker(root, v)
     return v
-
-
-def _read_ivf_compose(root: str, version: int) -> list[int]:
-    """Member version dirs of an IVF view: the version's compose manifest,
-    or just itself for plain :func:`save_ivf_cells` versions."""
-    import json
-    import os
-
-    p = os.path.join(root, f"v={version}", "_compose.json")
-    if os.path.exists(p):
-        return list(json.load(open(p))["includes"])
-    return [version]
 
 
 def load_ivf_cells(
@@ -177,22 +163,16 @@ def load_ivf_cells(
 ) -> DataFrame:
     """The stored inverted file as a DataFrame (``__cell`` recovered from
     the directory layout) — feed to :func:`~.operators.similarity.
-    ivf_topk_indexed` together with the matching saved centroids. A
-    version written by :func:`append_ivf_cells` resolves through its
-    compose manifest to the UNION of its member directories (each member
-    read keeps its own partition discovery, so ``__cell`` pruning pushes
-    into every branch)."""
+    ivf_topk_indexed` together with the matching saved centroids. Every
+    version, appended ones included, is one self-contained directory, so
+    this is one partition-discovering read and ``__cell`` filters prune
+    to the probed cell dirs."""
+    import os
+
     v = snapshot_table.latest_version(root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no snapshots under {root}")
-    import os
-    from functools import reduce
-
-    parts = [
-        spark.read.parquet(os.path.join(root, f"v={m}"))
-        for m in _read_ivf_compose(root, v)
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts)
+    return spark.read.parquet(os.path.join(root, f"v={v}"))
 
 
 def save_minhash_index(banded: DataFrame, root: str, n_files: int = 8) -> int:
@@ -307,11 +287,11 @@ def save_bm25_stats(
     """Persist a BM25 corpus index (:func:`~.operators.retrieval.
     bm25_corpus_stats` output) as three sibling snapshot tables under
     ``root`` — tf/ and lens/ as APPEND-ONLY tables (term-clustered /
-    doc-grained file sets new document batches extend zero-copy via
-    :func:`append_bm25_delta`), dfreq/ as a term-bucketed
-    ``carry='manifest'`` table so incremental document-frequency merges
-    rewrite only the term buckets a batch touches. Never collected: tf
-    scales with the corpus. Returns the three committed versions."""
+    doc-grained file sets new document batches extend without rewriting
+    via :func:`append_bm25_delta`), dfreq/ as a term-bucketed table so
+    incremental document-frequency merges rewrite only the term buckets a
+    batch touches. Never collected: tf scales with the corpus. Returns
+    the three committed versions."""
     import os
 
     v_tf = snapshot_table.append_snapshot(
@@ -325,7 +305,6 @@ def save_bm25_stats(
         os.path.join(root, "dfreq"),
         "term",
         n_buckets=n_term_buckets,
-        carry="manifest",
     )
     return v_tf, v_lens, v_df
 
@@ -340,18 +319,19 @@ def append_bm25_delta(
     commit_note: str | None = None,
 ) -> tuple[int, int, int]:
     """Incrementally extend a persisted BM25 index with a batch of NEW
-    documents — O(batch), never O(corpus):
+    documents — O(batch) bytes written, never O(corpus):
 
     - tf/lens rows of new docs are disjoint from existing ones (documents
-      are the unit of ingestion), so both tables grow by zero-copy
-      APPEND (:func:`~.table.append_snapshot` — the new version's
-      manifest re-references every existing posting file, only the
-      delta's files are written);
+      are the unit of ingestion), so both tables grow by APPEND
+      (:func:`~.table.append_snapshot` — only the delta's files are
+      written; every existing posting file hard-links into the new
+      version);
     - dfreq merges ADDITIVELY per term (``table.merge_additive_agg`` on
-      the term-bucketed manifest table: only touched term-buckets
-      rewrite) — document frequency is a count, exactly associative, so
-      incremental == full rebuild BIT-for-bit (pinned by the
-      retrieval_bm25_incremental oracle, which is the full-corpus SQL).
+      the term-bucketed table: only touched term-buckets rewrite, the
+      rest hard-link forward) — document frequency is a count, exactly
+      associative, so incremental == full rebuild BIT-for-bit (pinned by
+      the retrieval_bm25_incremental oracle, which is the full-corpus
+      SQL).
 
     Contract: ``new_docs`` ids must be NEW (re-ingesting an existing doc
     would double its postings — run exact dedup / an anti-join against
@@ -430,9 +410,9 @@ def append_sq8_codes(
     codes_delta: DataFrame, root: str, n_files: int = 2
 ) -> int:
     """Incrementally extend a saved SQ8 code table with NEW vectors'
-    codes — O(batch) via the snapshot layer's zero-copy APPEND (the new
-    version's manifest re-references every existing code file; only the
-    delta's files are written). Per-vector quantization is row-local, so
+    codes — O(batch) bytes via the snapshot layer's APPEND (only the
+    delta's files are written; every existing code file hard-links into
+    the new version). Per-vector quantization is row-local, so
     append == full re-quantization row-for-row — the same maintenance
     contract as ``append_bm25_delta``/``append_ivf_cells``. Ids must be
     NEW (re-appending an id would duplicate its coarse-scan row)."""

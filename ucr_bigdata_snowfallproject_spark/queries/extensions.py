@@ -2391,13 +2391,13 @@ def similarity_ivf_int8_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     """INCREMENTAL maintenance of the int8 IVF artifact
     (index_store.append_ivf_cells): build the inverted file from 80% of
     the corpus, append the remaining 20% as an O(batch) delta version
-    (the compose manifest re-references the base cell files — zero bytes
-    rewritten), and probe the composed view. int8 cell assignment is
-    per-row deterministic, so incremental == full rebuild row-for-row
-    and this query shares the FULL-corpus SQL oracle — the
-    index-maintenance contract (the BM25 append's twin for the ANN
-    family) externally hash-checked. Cell pruning pushes into every
-    compose member (each keeps its own partition discovery)."""
+    (the base cell files hard-link into it — zero bytes rewritten), and
+    probe the appended version. int8 cell assignment is per-row
+    deterministic, so incremental == full rebuild row-for-row and this
+    query shares the FULL-corpus SQL oracle — the index-maintenance
+    contract (the BM25 append's twin for the ANN family) externally
+    hash-checked. Cell pruning works as on a fresh build: the appended
+    version is one self-contained ``__cell``-partitioned directory."""
     from .. import index_store as ix
 
     e = load_table(spark, sf_dir, "embeddings")

@@ -1552,18 +1552,15 @@ def snapshot_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged keys never leave the full-outer diff join. The oracle
     recomputes both states and the IS-DISTINCT-FROM diff in pure SQL.
 
-    The table runs carry='manifest' (the object-store carry tier, round
-    6): both versions resolve through per-version manifests, so this
-    driver row also hash-checks the zero-copy carry-forward read path —
-    untouched buckets of v1 are metadata re-references into v0's files,
-    never links or copies."""
+    The table is key-bucketed, so this query also hash-checks the
+    carry-forward read path: untouched buckets of v1 are hard links to
+    v0's files."""
     from .. import table as snapshot_table
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
     root = _scratch_dir("snowfall-cdf-") + "/docs"
     snapshot_table.create_partitioned_snapshot(
-        d.filter(F.col("doc_id") < 300), root, "doc_id", n_buckets=8,
-        carry="manifest",
+        d.filter(F.col("doc_id") < 300), root, "doc_id", n_buckets=8
     )
     ups = (
         d.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 400))

@@ -9,6 +9,18 @@ travel); a marker file ``<root>/_latest`` names the committed version, and
 is written only after the snapshot directory is complete — a reader
 following the marker can never observe a half-written snapshot.
 
+Storage: a local POSIX filesystem. Every operation here is ``os`` /
+``shutil`` file work (listing, hard links, renames); an object-store tier
+would need a filesystem abstraction this module does not have.
+
+Invariant: every committed version directory is self-contained — its
+data files are physically under ``v=N``. A new version reuses data an
+older one wrote in exactly one way, :func:`_link_forward`: a hard link
+(same inode → byte-identical, zero data movement; physical-copy fallback
+where the filesystem refuses links). Readers therefore read one
+directory's files, and :func:`vacuum_snapshots` deletes old version
+directories outright — the filesystem reference-counts shared files.
+
 Scale notes: MERGE on an unpartitioned table is one full-outer-shaped
 join keyed on the merge key (sort-merge at scale; the updates side is
 typically ≪ target and AQE broadcasts it), and the rewrite cost is one
@@ -18,46 +30,28 @@ The partition-level tier (:func:`create_partitioned_snapshot`) removes
 that full-pass cost: snapshot dirs are hash-bucketed on the merge key
 (``__pbucket=K`` subdirs, Delta/Iceberg-style layout), and
 :func:`merge_upsert` on such a table rewrites ONLY the buckets containing
-touched keys. Untouched buckets carry forward by one of two modes
-(``carry=`` on :func:`create_partitioned_snapshot`, recorded in
-``_table.json``):
-
-- ``"link"`` (default): hard links into the new version dir —
-  byte-identical, zero data movement on POSIX filesystems; physical-copy
-  fallback where links are refused.
-- ``"manifest"``: the object-store tier — each version commits a
-  ``_manifest.json`` mapping bucket → list of data-file paths (relative
-  to the table root, possibly pointing into EARLIER versions'
-  directories). An untouched bucket costs zero bytes and zero copies on
-  ANY storage (S3/GCS have no hard links): the new manifest simply
-  re-references the previous version's files — the metadata-only
-  re-reference Iceberg/Delta snapshots do. Readers resolve versions
-  through the manifest; :func:`vacuum_snapshots` reference-counts:
-  files a kept version still references survive removal of the version
-  directory that first wrote them (relocated by rename, then the kept
-  manifests are rewritten).
-
-Per-batch cost in both modes is
+touched keys; untouched buckets hard-link forward. Per-batch cost is
 O(touched_buckets/n_buckets · table) + O(updates) instead of O(table):
 the difference between an incrementally-maintained 100 TB corpus and one
 that's rewritten nightly. The MERGE's touched-bucket scan prunes on the
-driver in both modes: it reads exactly the touched buckets' files (from
-the manifest, or the version's own bucket dirs in link mode), so footer
-reads are O(touched buckets) too.
-:func:`compact_snapshot` has the same shape: it rewrites only buckets
-that hold more than one data file and hard-links the rest, so its cost
-is O(fragmented buckets), and zero Spark jobs when nothing is
-fragmented. Snapshot reads take one sorted file list in both modes.
+driver: it reads exactly the touched buckets' files, so footer reads are
+O(touched buckets) too. :func:`compact_snapshot` has the same shape: it
+rewrites only buckets that hold more than one data file and hard-links
+the rest, so its cost is O(fragmented buckets), and zero Spark jobs when
+nothing is fragmented. :func:`append_snapshot` writes only the delta and
+hard-links the previous version's files. Snapshot reads take one sorted
+file list.
 """
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import re
 import shutil
 import threading
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -111,64 +105,6 @@ def _bucket_expr(key: str, n_buckets: int):
     return F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
 
 
-def _manifest_path(root: str, version: int) -> str:
-    return os.path.join(root, f"v={version}", "_manifest.json")
-
-
-def _read_manifest(root: str, version: int) -> dict[str, list[str]] | None:
-    """The version's committed manifest (bucket dir name → root-relative
-    data-file paths), or None on link-mode / pre-manifest versions."""
-    p = _manifest_path(root, version)
-    if os.path.isfile(p):
-        with open(p) as fh:
-            return json.load(fh)
-    return None
-
-
-def _write_manifest(root: str, version: int, manifest: dict[str, list[str]]) -> None:
-    """Stamp the manifest INTO the version dir before the ``_latest``
-    flip — like commit notes, it commits atomically with the data."""
-    tmp = _manifest_path(root, version) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, sort_keys=True)
-    os.replace(tmp, _manifest_path(root, version))
-
-
-def _self_manifest(root: str, version: int) -> dict[str, list[str]]:
-    """Manifest entries for the buckets PHYSICALLY present under ``v=N``
-    (fresh writes reference themselves; also the resolution fallback for
-    link-mode versions, whose directory contents ARE the snapshot)."""
-    vd = os.path.join(root, f"v={version}")
-    man: dict[str, list[str]] = {}
-    if not os.path.isdir(vd):
-        return man
-    for name in sorted(os.listdir(vd)):
-        if not name.startswith(f"{_PART_COL}="):
-            continue
-        files = sorted(
-            f"v={version}/{name}/{f}"
-            for f in os.listdir(os.path.join(vd, name))
-            if not f.startswith(("_", "."))
-        )
-        if files:
-            man[name] = files
-    return man
-
-
-def _manifest_or_self(root: str, version: int) -> dict[str, list[str]]:
-    man = _read_manifest(root, version)
-    return man if man is not None else _self_manifest(root, version)
-
-
-def _version_files(root: str, version: int) -> list[str]:
-    """Root-relative data files ``v=N`` resolves to: its manifest's
-    references, else the files physically under its directory."""
-    man = _read_manifest(root, version)
-    if man is None:
-        return _self_files(root, version)
-    return [rel for files in man.values() for rel in files]
-
-
 def _read_files(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
     """Read an explicit list of parquet data files, laid into partitions
     in the given order, with every footer unioned (``mergeSchema``).
@@ -199,14 +135,11 @@ def read_snapshot(
     v = latest_version(root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no snapshots under {root}")
-    # One sorted file list in both carry modes: manifest-mode versions
-    # resolve to their referenced files (which may live in EARLIER
-    # versions' directories — zero-copy carry-forward), link-mode and
-    # plain versions to the files physically under ``v=N``. Spark packs
-    # files into partitions by size with ties in input order, so the
-    # sort makes the row → partition layout of a snapshot read (and any
-    # seeded split over it) independent of directory listing order.
-    rels = _version_files(root, v)
+    # One sorted file list: Spark packs files into partitions by size with
+    # ties in input order, so the sort makes the row → partition layout of
+    # a snapshot read (and any seeded split over it) independent of
+    # directory listing order.
+    rels = _self_files(root, v)
     if not rels:
         raise FileNotFoundError(
             f"snapshot v={v} under {root} has no data files "
@@ -275,14 +208,14 @@ def create_snapshot(df: DataFrame, root: str, n_files: int | None = None) -> int
 
 def _hidden(name: str) -> bool:
     """Spark's hidden-path rule: ``.`` names and ``_`` names that are not
-    ``col=value`` partition directories (``_SUCCESS``, ``_manifest.json``,
-    ``_note``, ``.crc`` checksums)."""
+    ``col=value`` partition directories (``_SUCCESS``, ``_note``, ``.crc``
+    checksums)."""
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
 def _self_files(root: str, version: int) -> list[str]:
-    """Root-relative data files of ``v=N`` — top-level files plus bucket
-    subdir files (resolution fallback for manifest-less versions)."""
+    """Root-relative data files of ``v=N`` — top-level files plus
+    ``col=value`` subdir files (bucket or cell dirs), sorted."""
     vd = os.path.join(root, f"v={version}")
     out: list[str] = []
     if not os.path.isdir(vd):
@@ -302,71 +235,97 @@ def _self_files(root: str, version: int) -> list[str]:
     return out
 
 
+def _bucket_files(root: str, version: int) -> dict[str, list[str]]:
+    """Bucket dir name → root-relative data files of that bucket, for the
+    buckets of ``v=N`` that hold any."""
+    out: dict[str, list[str]] = {}
+    for rel in _self_files(root, version):
+        d = rel.split("/")[1]
+        if d.startswith(f"{_PART_COL}="):
+            out.setdefault(d, []).append(rel)
+    return out
+
+
+#: ``os.link`` errnos meaning "this filesystem will not link these" —
+#: the only ones the copy fallback covers; anything else (a name collision
+#: above all) must not turn into a silent overwrite
+_NO_LINK_ERRNOS = frozenset(
+    {errno.EXDEV, errno.EPERM, errno.EMLINK, errno.ENOTSUP, errno.EOPNOTSUPP}
+)
+
+
+def _link_forward(root: str, rels: Iterable[str], version: int) -> None:
+    """Hard-link root-relative data files ``v=M/<sub>/f`` of an older
+    version to ``v=version/<sub>/f`` — the one way a new version reuses
+    data an older one wrote (MERGE's untouched buckets, compaction's
+    compact buckets, appends). Same inode → byte-identical, zero data
+    movement, and the new version dir stays self-contained. Each file's
+    ``.crc`` checksum sidecar goes along. Where the filesystem refuses
+    links (cross-device, no link support, link-count limit) the file is
+    copied; any other error, e.g. an existing destination, raises."""
+    for rel in rels:
+        src = os.path.join(root, rel)
+        dst = os.path.join(root, f"v={version}", rel.split("/", 1)[1])
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        pairs = [(src, dst)]
+        crc = os.path.join(os.path.dirname(src), f".{os.path.basename(src)}.crc")
+        if os.path.exists(crc):
+            pairs.append(
+                (crc, os.path.join(os.path.dirname(dst), os.path.basename(crc)))
+            )
+        for s, d in pairs:
+            try:
+                os.link(s, d)
+            except OSError as e:
+                if e.errno not in _NO_LINK_ERRNOS:
+                    raise
+                shutil.copy2(s, d)
+
+
 def append_snapshot(
     df: DataFrame, root: str, n_files: int | None = None, note: str | None = None
 ) -> int:
-    """APPEND-ONLY commit: the new version = every file the previous
-    version resolved to PLUS the delta's files — existing data is never
-    rewritten, copied, or linked (a manifest re-reference, like the
-    bucketed ``carry='manifest'`` tier but for row-append workloads:
-    growing posting lists, event logs, corpus shards). Cost per batch is
-    O(delta); on any storage including object stores.
+    """APPEND-ONLY commit: the new version = the delta's files written
+    fresh PLUS every file of the previous version hard-linked forward
+    (:func:`_link_forward`) — existing data is never rewritten, for
+    row-append workloads: growing posting lists, event logs, corpus
+    shards. Cost per batch is O(delta) bytes plus one link per existing
+    file.
 
     Contract: pure INSERT — the caller guarantees delta rows are new
-    (append-only tables have no key). Readers resolve through the
-    manifest, so old versions stay time-travelable and
-    :func:`vacuum_snapshots` reference-counts shared files."""
+    (append-only tables have no key). Every version is self-contained,
+    so old versions stay time-travelable and :func:`vacuum_snapshots`
+    may delete any of them."""
     os.makedirs(root, exist_ok=True)
     versions = snapshot_versions(root)
-    if not versions:
-        v = 0
-        _commit_files = df
-        if n_files is not None:
-            _commit_files = df.repartition(n_files)
-        _commit_files.write.mode("errorifexists").parquet(
-            os.path.join(root, f"v={v}")
-        )
-        _write_manifest(root, v, {"__data": _self_files(root, v)})
-        if note is not None:
-            _write_note(root, v, note)
-        _write_marker(root, v)
-        return v
-    cur_v = latest_version(root)
-    new_v = versions[-1] + 1
-    prev_files = _version_files(root, cur_v)
+    v = (versions[-1] + 1) if versions else 0
     delta = df.repartition(n_files) if n_files is not None else df
-    delta.write.mode("errorifexists").parquet(os.path.join(root, f"v={new_v}"))
-    new_files = _self_files(root, new_v)
-    _write_manifest(root, new_v, {"__data": sorted(prev_files) + new_files})
+    delta.write.mode("errorifexists").parquet(os.path.join(root, f"v={v}"))
+    if versions:
+        _link_forward(root, _self_files(root, latest_version(root)), v)
     if note is not None:
-        _write_note(root, new_v, note)
-    _write_marker(root, new_v)
-    return new_v
+        _write_note(root, v, note)
+    _write_marker(root, v)
+    return v
 
 
 def create_partitioned_snapshot(
-    df: DataFrame, root: str, key: str, n_buckets: int = 16, carry: str = "link"
+    df: DataFrame, root: str, key: str, n_buckets: int = 16
 ) -> int:
     """Create a KEY-BUCKETED snapshot table: rows land in
     ``v=N/__pbucket=hash(key) % n_buckets/`` dirs, and every later
-    :func:`merge_upsert` rewrites only the buckets whose keys changed —
-    the partition-level MERGE tier (see module docstring).
+    :func:`merge_upsert` rewrites only the buckets whose keys changed and
+    hard-links the rest forward — the partition-level MERGE tier (see
+    module docstring).
 
     ``n_buckets`` sizes the rewrite granularity: each merge pays
     O(touched_buckets · table/n_buckets). At 100 TB pick n_buckets so one
     bucket is a few GB (thousands of buckets); updates drawn from across
     the keyspace touch many buckets — that's still bounded by n_buckets
     reads of table/n_buckets each, never more than one full pass, and
-    hot-key batches touch few.
-
-    ``carry`` picks the untouched-bucket carry-forward mode (module
-    docstring): ``"link"`` (hard links, POSIX) or ``"manifest"``
-    (metadata-only re-reference — the object-store tier, zero bytes per
-    untouched bucket on any storage)."""
-    if carry not in ("link", "manifest"):
-        raise ValueError(f"carry must be 'link' or 'manifest', got {carry!r}")
+    hot-key batches touch few."""
     os.makedirs(root, exist_ok=True)
-    meta = {"bucket_key": key, "n_buckets": int(n_buckets), "carry": carry}
+    meta = {"bucket_key": key, "n_buckets": int(n_buckets)}
     tmp = os.path.join(root, "_table.json.tmp")
     with open(tmp, "w") as fh:
         json.dump(meta, fh)
@@ -374,8 +333,6 @@ def create_partitioned_snapshot(
     versions = snapshot_versions(root)
     v = (versions[-1] + 1) if versions else 0
     _write_partitioned(df, root, v, key, n_buckets)
-    if carry == "manifest":
-        _write_manifest(root, v, _self_manifest(root, v))
     _write_marker(root, v)
     return v
 
@@ -392,45 +349,6 @@ def _write_partitioned(
         .partitionBy(_PART_COL)
         .parquet(os.path.join(root, f"v={version}"))
     )
-
-
-def _carry_forward(
-    root: str,
-    prev_man: dict[str, list[str]],
-    buckets: Sequence[str],
-    version: int,
-    link: bool,
-) -> dict[str, list[str]]:
-    """Move ``buckets`` of the previous version (``prev_man``) into
-    ``v=version`` WITHOUT rewriting them; returns their manifest entries.
-    The one place that decides how an untouched bucket reaches a new
-    version. ``link=True``: hard links into the new version dir (same
-    inode → byte-identical, zero data movement; physical-copy fallback
-    where the filesystem refuses links), so the version dir is
-    self-contained. ``link=False``: a metadata-only re-reference of the
-    files where they already live — the manifest tier, zero bytes on any
-    storage."""
-    out: dict[str, list[str]] = {}
-    for d in buckets:
-        rels = prev_man[d]
-        if link:
-            dst_dir = os.path.join(root, f"v={version}", d)
-            os.makedirs(dst_dir, exist_ok=True)
-            for rel in rels:
-                src = os.path.join(root, rel)
-                crc = os.path.join(
-                    os.path.dirname(src), f".{os.path.basename(src)}.crc"
-                )
-                # the file, plus its local-filesystem checksum sidecar
-                for s in [src] + ([crc] if os.path.exists(crc) else []):
-                    dst = os.path.join(dst_dir, os.path.basename(s))
-                    try:
-                        os.link(s, dst)
-                    except OSError:
-                        shutil.copy2(s, dst)
-            rels = [f"v={version}/{d}/{os.path.basename(rel)}" for rel in rels]
-        out[d] = rels
-    return out
 
 
 def merge_upsert(
@@ -479,11 +397,11 @@ def merge_upsert(
             )
         return _merge_upsert_partitioned(
             spark, root, updates, key, meta["n_buckets"], delete_col,
-            commit_note, evolve_schema, carry=meta.get("carry", "link"),
+            commit_note, evolve_schema,
         )
     try:
         target = read_snapshot(spark, root)
-    except Exception:
+    except FileNotFoundError:
         target = None  # bootstrap-empty version: no files to infer from
     if evolve_schema and target is not None:
         target = _evolve(target, updates, delete_col)
@@ -536,7 +454,6 @@ def _merge_upsert_partitioned(
     delete_col: str | None,
     commit_note: str | None = None,
     evolve_schema: bool = False,
-    carry: str = "link",
 ) -> int:
     """Partition-level MERGE: same row semantics as the COW path (pinned
     identical in tests), different cost — O(touched buckets), not
@@ -546,15 +463,13 @@ def _merge_upsert_partitioned(
     update/insert/delete row's bucket is in it BY CONSTRUCTION — an
     untouched bucket cannot contain an affected key, so skipping it is
     exact, not approximate); the collect is ≤ n_buckets small ints.
-    (2) Only touched buckets are read — exactly the files the previous
-    version resolves to for them (its manifest, or its own bucket dirs in
-    link mode): driver-side pruning, one footer per touched file — and
-    merged with the updates.
+    (2) Only touched buckets are read — exactly the previous version's
+    files in those bucket dirs: driver-side pruning, one footer per
+    touched file — and merged with the updates.
     (3) The merged rows write into the new version dir (inserted keys
     re-bucket with the same hash, so they land inside the touched set);
-    untouched buckets carry forward — hard links in link mode, a
-    metadata-only manifest re-reference (zero bytes) in manifest mode.
-    (4) Manifest/note stamp, then the marker flip commits."""
+    untouched buckets hard-link forward (:func:`_link_forward`).
+    (4) Note stamp, then the marker flip commits."""
     cur_v = latest_version(root)
     new_v = snapshot_versions(root)[-1] + 1
 
@@ -567,25 +482,19 @@ def _merge_upsert_partitioned(
         .collect()
     )
     touched_dirs = {f"{_PART_COL}={b}" for b in touched}
-    prev_man = _manifest_or_self(root, cur_v)
-    # Only the touched buckets' files are read, in both carry modes
-    # (driver-side pruning through the manifest, or the version's own
-    # bucket dirs in link mode): footer reads and the scan stay
-    # O(touched buckets). mergeSchema: after an evolve_schema merge a
-    # touched bucket may hold pre-evolution files beside evolved ones, and
-    # a single sampled footer would drop the evolved column. An
-    # all-rows-deleted (or bootstrap-empty) version has no parquet files
-    # to infer from — fall back to the updates' schema and merge against
-    # an empty target.
+    prev = _bucket_files(root, cur_v)
+    # Only the touched buckets' files are read (driver-side pruning):
+    # footer reads and the scan stay O(touched buckets). mergeSchema:
+    # after an evolve_schema merge a touched bucket may hold pre-evolution
+    # files beside evolved ones, and a single sampled footer would drop
+    # the evolved column. Touched buckets with no files (all rows deleted,
+    # or new keys) merge against an empty target with the updates' schema.
     src_files = [
         os.path.join(root, rel)
         for d in sorted(touched_dirs)
-        for rel in prev_man.get(d, [])
+        for rel in prev.get(d, [])
     ]
-    try:
-        src_df = _read_files(spark, src_files) if src_files else None
-    except Exception:
-        src_df = None
+    src_df = _read_files(spark, src_files) if src_files else None
     if src_df is not None and not evolve_schema:
         # Updates naming a column the touched buckets' files lack: an
         # earlier evolve_schema MERGE may have added it in OTHER buckets,
@@ -593,7 +502,7 @@ def _merge_upsert_partitioned(
         lacking = {c for c in updates.columns if c not in src_df.columns}
         if lacking - {delete_col}:
             table_schema = _read_files(spark, [
-                os.path.join(root, rel) for rels in prev_man.values() for rel in rels
+                os.path.join(root, rel) for rels in prev.values() for rel in rels
             ]).schema
             for f in table_schema.fields:
                 if f.name in lacking:
@@ -628,15 +537,11 @@ def _merge_upsert_partitioned(
     else:
         os.makedirs(os.path.join(root, f"v={new_v}"), exist_ok=True)
 
-    # Untouched buckets: hard links in link mode; in manifest mode the new
-    # manifest re-references whatever files the previous version resolved
-    # to (which may already live several versions back).
-    carried = _carry_forward(
-        root, prev_man, [d for d in prev_man if d not in touched_dirs], new_v,
-        link=carry != "manifest",
+    _link_forward(
+        root,
+        [rel for d, rels in prev.items() if d not in touched_dirs for rel in rels],
+        new_v,
     )
-    if carry == "manifest":
-        _write_manifest(root, new_v, {**_self_manifest(root, new_v), **carried})
     if commit_note is not None:
         _write_note(root, new_v, commit_note)
     _write_marker(root, new_v)
@@ -655,23 +560,20 @@ def compact_snapshot(
     compact per bucket (``n_files`` does not apply): only buckets holding
     more than one data file are read (with ``mergeSchema``) and rewritten,
     each to one file; every other bucket is already compact and
-    hard-links into the new version unchanged (copy fallback), like the
-    untouched buckets of a link-mode MERGE. Cost is O(fragmented
-    buckets), and when nothing is fragmented the commit is driver-side
-    file operations only — no footer read, zero Spark jobs — yet it
-    still commits a new version. In both carry modes the new version is
-    self-contained: a manifest-mode compaction references only its own
-    directory, which drops every reference into older versions and makes
-    them vacuumable for free."""
+    hard-links into the new version unchanged (:func:`_link_forward`),
+    like the untouched buckets of a MERGE. Cost is O(fragmented buckets),
+    and when nothing is fragmented the commit is driver-side file
+    operations only — no footer read, zero Spark jobs — yet it still
+    commits a new version, self-contained like every other."""
     meta = table_meta(root)
     v = snapshot_versions(root)[-1] + 1
     if meta is None:
         return _commit(read_snapshot(spark, root), root, v, n_files)
-    prev_man = _manifest_or_self(root, latest_version(root))
-    fragmented = [d for d, rels in prev_man.items() if len(rels) > 1]
+    prev = _bucket_files(root, latest_version(root))
+    fragmented = [d for d, rels in prev.items() if len(rels) > 1]
     if fragmented:
         files = sorted(
-            os.path.join(root, rel) for d in fragmented for rel in prev_man[d]
+            os.path.join(root, rel) for d in fragmented for rel in prev[d]
         )
         _write_partitioned(
             _read_files(spark, files),
@@ -679,11 +581,11 @@ def compact_snapshot(
         )
     else:
         os.makedirs(os.path.join(root, f"v={v}"))
-    _carry_forward(
-        root, prev_man, [d for d in prev_man if d not in fragmented], v, link=True
+    _link_forward(
+        root,
+        [rel for d, rels in prev.items() if d not in fragmented for rel in rels],
+        v,
     )
-    if meta.get("carry") == "manifest":
-        _write_manifest(root, v, _self_manifest(root, v))
     _write_marker(root, v)
     return v
 
@@ -724,7 +626,7 @@ def merge_additive_agg(
     exactly-once appliers (see :func:`version_note`)."""
     try:
         cur = read_snapshot(spark, root)
-    except Exception:
+    except FileNotFoundError:
         cur = None  # bootstrap-empty snapshot: no files to read yet
     if cur is None:
         combined = delta.select(key, *add_cols)
@@ -749,112 +651,19 @@ def vacuum_snapshots(root: str, keep_last: int = 2) -> list[int]:
     the snapshot lifecycle, without which an actively-merged table
     accretes versions forever.
 
-    Safe BY CONSTRUCTION in both carry modes. Link mode: carried-forward
-    files are hard links, so a file shared into a kept version survives
-    deletion of the old directory (the inode lives until its last link
-    goes) — the filesystem does the reference counting. Manifest mode:
-    explicit reference counting with a CRASH-SAFE, idempotent rescue
-    order — every data file a KEPT version's manifest still references
-    is first hard-linked (copy-via-tmp+rename where links are
-    unsupported; no data movement on one filesystem) into the first kept
-    version that references it, then all kept manifests are rewritten,
-    and only THEN are the doomed directories removed. A crash at any
-    point leaves every manifest resolvable: before a rewrite the old
-    path still exists (the source is never unlinked early), after it the
-    new path does — and re-running vacuum reuses an already-rescued
-    destination instead of colliding (same-inode check for the primary
-    name; the ``gc<v>-`` fallback name is unique per source file and
-    written atomically, so its existence proves completeness).
-    Concurrent readers mid-vacuum see whichever manifest they resolved;
-    both path generations exist until the final directory removal.
-    Unreferenced files die with their directory. Time travel to a
-    vacuumed version subsequently raises; that's the retention trade
-    every table format makes. Returns the removed version numbers."""
+    Safe BY CONSTRUCTION: every version directory is self-contained, and
+    a file shared with a kept version is a hard link there (or a copy
+    where links were refused), so it survives deletion of the old
+    directory — the inode lives until its last link goes; the filesystem
+    does the reference counting. Time travel to a vacuumed version
+    subsequently raises; that's the retention trade every table format
+    makes. Returns the removed version numbers."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     versions = snapshot_versions(root)
     latest = latest_version(root)
-    keep = sorted(set(versions[-keep_last:]) | ({latest} if latest is not None else set()))
+    keep = set(versions[-keep_last:]) | ({latest} if latest is not None else set())
     removed = [v for v in versions if v not in keep]
-    removed_set = set(removed)
-    # Compose-root guard (ADVICE r07): index_store.append_ivf_cells builds
-    # views whose _compose.json re-references EARLIER version dirs as live
-    # data — they are members of the latest view, not superseded history.
-    # Deleting one silently truncates the index, so refuse instead of
-    # trusting a docstring. A compacted root (save_ivf_cells of the loaded
-    # view — self-contained versions, no compose manifest referencing
-    # doomed dirs) vacuums normally.
-    for kv in keep:
-        cp = os.path.join(root, f"v={kv}", "_compose.json")
-        if not os.path.exists(cp):
-            continue
-        with open(cp) as fh:
-            members = set(json.load(fh).get("includes", []))
-        doomed = sorted(members & removed_set)
-        if doomed:
-            raise ValueError(
-                f"refusing to vacuum composed root {root}: kept version "
-                f"v={kv} is a composed view whose live members include "
-                f"{['v=%d' % d for d in doomed]} — compact first via "
-                "save_ivf_cells(load_ivf_cells(...), new_root)"
-            )
-    # manifest-mode GC: rescue still-referenced files out of doomed dirs
-    moves: dict[str, str] = {}
-    for kv in keep:
-        man = _read_manifest(root, kv)
-        if man is None:
-            continue
-        changed = False
-        for bucket, rels in man.items():
-            new_rels = []
-            for rel in rels:
-                head = rel.split("/", 1)[0]  # "v=N"
-                src_v = int(head.split("=")[1])
-                if src_v not in removed_set:
-                    new_rels.append(rel)
-                    continue
-                if rel not in moves:
-                    src = os.path.join(root, rel)
-                    base = os.path.basename(rel)
-                    # candidate order: plain name, then the gc<v>- name
-                    # (unique per source file — src_v+bucket+base is the
-                    # source identity, so an existing gc file IS an
-                    # earlier rescue of this very file)
-                    cands = (
-                        f"v={kv}/{bucket}/{base}",
-                        f"v={kv}/{bucket}/gc{src_v}-{base}",
-                    )
-                    dst_rel = None
-                    for n_cand, cand in enumerate(cands):
-                        dstp = os.path.join(root, cand)
-                        if os.path.exists(dstp):
-                            try:
-                                same = os.path.samefile(src, dstp)
-                            except OSError:
-                                same = False
-                            if same or n_cand == 1:
-                                dst_rel = cand  # idempotent re-run: reuse
-                                break
-                            continue  # plain name taken by another file
-                        os.makedirs(os.path.dirname(dstp), exist_ok=True)
-                        try:
-                            # link first — src stays until final rmtree
-                            os.link(src, dstp)
-                        except OSError:
-                            # no-hardlink FS: atomic copy (tmp + rename),
-                            # so a crash never leaves a partial dst
-                            tmp = dstp + ".gc-tmp"
-                            shutil.copy2(src, tmp)
-                            os.replace(tmp, dstp)
-                        dst_rel = cand
-                        break
-                    assert dst_rel is not None  # gc name always resolves
-                    moves[rel] = dst_rel
-                new_rels.append(moves[rel])
-                changed = True
-            man[bucket] = new_rels
-        if changed:
-            _write_manifest(root, kv, man)
     for v in removed:
         shutil.rmtree(os.path.join(root, f"v={v}"))
     return removed
