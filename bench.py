@@ -301,8 +301,9 @@ def plan_audit_variants():
     )
 
     return {
-        # one label-propagation round, pre-localCheckpoint — includes the
-        # banded minhash candidate self-join upstream
+        # the vertex-state build + one label-propagation round (one
+        # groupBy each), pre-localCheckpoint — includes the banded
+        # minhash candidate self-join upstream
         "dedup_minhash_components_md5_iteration":
             dedup_minhash_components_md5_iteration,
     }

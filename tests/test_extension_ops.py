@@ -265,6 +265,119 @@ def test_dup_components_label_raises_on_nonconvergence(spark):
         dedup_ops.dup_components(bpairs, max_iter=0)
 
 
+def test_dup_components_null_ids_join_no_component(spark):
+    """A NULL endpoint comes back as (NULL, NULL) and never bridges two
+    components: (4, NULL) and (NULL, 3) leave 3 and 4 apart."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (None, 3), (4, None), (5, 5)], "id_a long, id_b long"
+    )
+    want = {(1, 1), (2, 1), (3, 3), (4, 4), (5, 5), (None, None)}
+    for alg in ("label", "star"):
+        got = [
+            (r.id, r.comp)
+            for r in dedup_ops.dup_components(pairs, algorithm=alg).collect()
+        ]
+        assert len(got) == len(want) and set(got) == want, alg
+
+
+def test_dup_components_leaves_session_usable_for_mllib(spark):
+    """The convergence counts must not leave the session unable to
+    serialize: an MLlib LogisticRegressionModel carries the session in its
+    training summary, so scoring with it after dup_components (both
+    algorithms) has to keep working."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.linalg import Vectors
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    for alg in ("label", "star"):
+        assert dedup_ops.dup_components(pairs, algorithm=alg).count() == 3
+    train = spark.createDataFrame(
+        [(Vectors.dense([float(i)]), float(i % 2)) for i in range(20)],
+        ["features", "label"],
+    )
+    model = LogisticRegression(maxIter=3).fit(train)
+    assert model.transform(train).select("probability").count() == 20
+
+
+def test_dup_components_rejects_modes_without_an_action(spark):
+    """The convergence counts are observed on the materialising action,
+    so modes that run none are refused up front, naming the accepted
+    ones."""
+    import pytest
+
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    for alg in ("label", "star"):
+        for mode in ("none", "persist"):
+            with pytest.raises(ValueError, match="'local'.*'table'"):
+                dedup_ops.dup_components(pairs, checkpoint_mode=mode, algorithm=alg)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn()`` under a fresh job group; return (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dup_components_label_one_action_per_round(spark):
+    """Each label-propagation round is one exchange plus one materialising
+    action, with the convergence counts observed on that action: at most
+    two jobs per round, the state build included. A 6-chain plus 50
+    disjoint 2-cliques needs the build + 4 lowering rounds; the last one
+    is settled, so no confirm round runs."""
+    edges = [(i, i + 1) for i in range(5)] + [
+        (100 + 2 * i, 101 + 2 * i) for i in range(50)
+    ]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").localCheckpoint(
+        eager=True
+    )
+    labels, jobs = _jobs_in_group(
+        spark, "dup-components-jobs", lambda: dedup_ops.dup_components(pairs)
+    )
+    rounds = 5
+    assert jobs <= 2 * rounds, f"{jobs} jobs for {rounds} rounds"
+    assert {(r.id, r.comp) for r in labels.collect()} == {
+        (a, b) for a, b in _union_find_labels(edges).items()
+    }
+
+
+def test_dup_components_matches_union_find_under_every_mode(spark):
+    """Label propagation equals a driver-side union-find under the
+    materialisation modes it accepts: seeded random graphs, a hub with
+    2,000 leaves, and duplicate pairs in both orientations."""
+    import random
+
+    graphs = []
+    for seed in (3, 17):
+        rng = random.Random(seed)
+        graphs.append(
+            [(rng.randrange(100), rng.randrange(200)) for _ in range(50)]
+        )
+    graphs.append([(7, 10_000 + i) for i in range(2000)])
+    graphs.append([(1, 2), (2, 1), (1, 2), (3, 2), (2, 3), (9, 8), (8, 9), (9, 9)])
+    # one disjoint union (ids offset per graph): one call per mode
+    edges = [
+        (a + 100_000 * g, b + 100_000 * g)
+        for g, es in enumerate(graphs)
+        for a, b in es
+    ]
+    truth = _union_find_labels(edges)
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    for mode in ("local", "reliable", "table"):
+        got = [
+            (r.id, r.comp)
+            for r in dedup_ops.dup_components(
+                pairs, max_iter=100, checkpoint_mode=mode
+            ).collect()
+        ]
+        assert len(got) == len(truth), mode
+        assert dict(got) == truth, mode
+
+
 def test_group_quantiles_approx_tracks_exact(spark):
     """The percentile_approx (mergeable-sketch) switch of group_quantiles
     must track the exact interpolated form within sketch tolerance at high
@@ -2301,31 +2414,34 @@ def test_pair_dot_scores_chunked_bit_identical(spark, monkeypatch):
         S._pair_dot_scores(members, ragged).collect()
 
 
-def test_label_iteration_flagged_matches_and_flags(spark):
-    """_label_iteration_flagged (round 17): the (id, comp) projection is
-    exactly _label_iteration's output, and __chg is true precisely for
-    the nodes whose comp the round lowered."""
+def test_cc_round_takes_neighbourhood_min_and_observes_counts(spark):
+    """_cc_round: each node's new comp is the min over its closed
+    neighbourhood's previous comps, and the counts observed on the
+    materialising action are the nodes the round lowered and, of those,
+    the ones with a neighbour whose previous comp exceeds the new one."""
     from ucr_bigdata_snowfallproject_spark.operators.dedup import (
-        _label_edges, _label_iteration, _label_iteration_flagged, _label_seed,
+        _cc_round, _cc_state, _materialize_observed, _round_counts,
     )
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)], "id_a long, id_b long"
-    )
-    edges = _label_edges(pairs)
-    labels = _label_seed(edges)
-    for _round in range(3):
-        flagged = _label_iteration_flagged(edges, labels).collect()
-        plain = {
-            (r.id, r.comp) for r in _label_iteration(edges, labels).collect()
-        }
-        assert {(r.id, r.comp) for r in flagged} == plain
-        before = {r.id: r.comp for r in labels.collect()}
-        for r in flagged:
-            assert r["__chg"] == (r.comp < before[r.id]), r
-        labels = spark.createDataFrame(
-            [(r.id, r.comp) for r in flagged], "id long, comp long"
+    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20), (31, 30), (30, 32)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    state, seen = _materialize_observed(_cc_state(pairs), "local", **_round_counts())
+    before = {u: u for u in adj}
+    for _round in range(4):
+        comp = {r.u: r.comp for r in state.collect()}
+        want = {u: min([before[u]] + [before[v] for v in adj[u]]) for u in adj}
+        assert comp == want
+        lowered = [u for u in adj if want[u] < before[u]]
+        assert seen["lowered"] == len(lowered)
+        assert seen["unsettled"] == sum(
+            max(before[v] for v in adj[u]) > want[u] for u in lowered
         )
+        before = comp
+        state, seen = _materialize_observed(_cc_round(state), "local", **_round_counts())
 
 
 def test_semdedup_pairs_are_exact_subset(spark):

@@ -2,15 +2,16 @@
 Spark: seed parsing, quartiles, the claim rule (the change wins at
 least nine tenths of the pairs and the median gap exceeds the base's
 interquartile range; failed runs count for neither side), the
-no-regression verdict per metric, and the run length and metric set
-coming from the benchmark's own declaration."""
+no-regression verdict per metric, the run length and metric set
+coming from the benchmark's own declaration, and the ungated wall
+timings reported as information only."""
 
 from __future__ import annotations
 
 import json
 
 from tools.perfbench_ab import (
-    end_to_end, parse_seeds, quartiles, report, run_seconds, verdict,
+    end_to_end, parse_info, parse_seeds, quartiles, report, run_seconds, verdict,
 )
 
 METRICS = [
@@ -81,3 +82,30 @@ def test_run_length_comes_from_benchmark_json(tmp_path):
 def test_metrics_come_from_benchmark_json(tmp_path):
     (tmp_path / "BENCHMARK.json").write_text(json.dumps({"end_to_end": METRICS}))
     assert end_to_end(str(tmp_path)) == METRICS
+
+
+def test_ungated_timings_are_info_only(capsys):
+    stdout = "\n".join([
+        "# run warm-0 job_s=11.142 jobs=36.000",
+        "spark_jobs 36 count",
+        "cold_job_s 24.1786 s",
+        "job_s 11.1422 s",
+        "export_s 2.27712 s",
+        "train_s n/a s",
+        '{"correct": true}',
+    ])
+    assert parse_info(stdout) == {"job_s": 11.1422, "cold_job_s": 24.1786}
+    assert parse_info("job_s n/a s") == {}
+
+    pairs = [
+        {"base": {**_rec(spark_jobs=58), "info": {"job_s": 12.0 + i, "cold_job_s": 25.0}},
+         "change": {**_rec(spark_jobs=36), "info": {"job_s": 11.0 + i, "cold_job_s": 24.0}}}
+        for i in range(5)
+    ]
+    report("w", pairs, METRICS[1:2])
+    out = capsys.readouterr().out
+    assert "job_s base: median 14 q1 13 q3 15 (n=5; info, not gated)" in out
+    assert "cold_job_s change: median 24 q1 24 q3 24 (n=5; info, not gated)" in out
+    info_lines = [ln for ln in out.splitlines() if ln.startswith(("job_s", "cold_job_s"))]
+    assert len(info_lines) == 4
+    assert not any("claimable" in ln or "no-regression" in ln for ln in info_lines)

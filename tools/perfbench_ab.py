@@ -24,6 +24,10 @@ quartiles, and per metric:
   ``unresolved`` (the base's IQR is wider than ``bound`` of its median
   and not every change run is better than every base run).
 
+It also prints each side's median and quartiles of the wall timings
+the benchmark prints but does not gate (``job_s``, ``cold_job_s``),
+labelled "info, not gated", with no verdict.
+
 A run that exits non-zero or reports ``correct: false`` counts as
 failed; its pair counts for neither side. ``--jsonl`` appends every
 run's record.
@@ -40,6 +44,9 @@ import sys
 import time
 
 SIDES = ("base", "change")
+#: wall timings ``perfbench/run.py`` prints as ``name value unit`` lines
+#: but leaves out of its gated metrics
+INFO_METRICS = ("job_s", "cold_job_s")
 
 
 def parse_seeds(spec: str) -> list[int]:
@@ -67,6 +74,19 @@ def end_to_end(checkout: str) -> list[dict]:
     return _benchmark(checkout)["end_to_end"]
 
 
+def parse_info(stdout: str) -> dict[str, float]:
+    """The :data:`INFO_METRICS` values among a run's printed lines."""
+    out = {}
+    for line in stdout.splitlines():
+        parts = line.split()
+        if len(parts) == 3 and parts[0] in INFO_METRICS:
+            try:
+                out[parts[0]] = float(parts[1])
+            except ValueError:  # "n/a"
+                pass
+    return out
+
+
 def run_one(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     """One benchmark process in ``checkout``; its last stdout line is the
     JSON summary."""
@@ -76,7 +96,7 @@ def run_one(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     rec = {"checkout": checkout, "workload": workload, "seed": seed,
            "exit": proc.returncode, "wall_s": time.perf_counter() - t0,
-           "correct": False, "metrics": {}}
+           "correct": False, "metrics": {}, "info": parse_info(proc.stdout)}
     lines = proc.stdout.strip().splitlines()
     try:
         summary = json.loads(lines[-1])
@@ -137,6 +157,13 @@ def report(workload: str, pairs: list[dict[str, dict]], metrics: list[dict]) -> 
               f"gain claimable: {'yes' if claim else 'no'}; "
               f"no-regression (bound {spec['bound']:g}): "
               f"{verdict(vals['base'], vals['change'], spec['better'], spec['bound'])}")
+    for m in INFO_METRICS:
+        for s in SIDES:
+            xs = [p[s]["info"][m] for p in ok if m in p[s].get("info", {})]
+            if xs:
+                q1, med, q3 = quartiles(xs)
+                print(f"{m} {s}: median {med:.6g} q1 {q1:.6g} q3 {q3:.6g} "
+                      f"(n={len(xs)}; info, not gated)")
 
 
 def main(argv=None) -> int:

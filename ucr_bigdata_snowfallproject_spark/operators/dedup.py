@@ -22,6 +22,7 @@ batches (the default, ~8× faster) — the forms are bit-identical.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Sequence
 
 import pandas as pd
@@ -1579,79 +1580,126 @@ def minhash_dedup(
     return df.join(losers, on=id_col, how="left_anti")
 
 
-def _label_edges(pairs: DataFrame) -> DataFrame:
-    """Symmetrized (src, dst) edge list from dup pairs — the frame every
-    label-propagation round joins against. Both directions emit from ONE
-    in-row explode (round 17): the old self-union's two branches each
-    re-ran the un-materialized pair build (the banded minhash candidate
-    self-join, in the components queries) inside the edge-materialization
-    action — same multiset of rows, half the upstream scans."""
+#: checkpoint modes whose materialisation runs an action; the connected
+#: components loops read their convergence counts from that action
+_CC_CHECKPOINT_MODES = ("local", "eager", "reliable", "table")
+
+
+def _materialize_observed(
+    df: DataFrame, checkpoint_mode: str, **metrics: F.Column
+) -> tuple[DataFrame, dict]:
+    """:func:`_materialize` ``df`` and return the ``metrics`` (name →
+    aggregate over ``df``'s rows).
+
+    Under ``"local"``, ``"eager"`` and ``"reliable"`` the metrics are a
+    named ``observe`` on the frame, computed by the materialising action
+    itself (no job of their own) and read from the frame's own
+    QueryExecution. pyspark's ``Observation`` is not used: it creates the
+    session's ObservationManager, which is not serializable, and from then
+    on every task that serializes the session fails (MLlib's
+    ``LogisticRegressionModel`` does, through its training summary).
+    ``"table"`` writes through a separate command, so its metrics take one
+    aggregate job over the written table."""
+    aggs = [agg.alias(name) for name, agg in metrics.items()]
+    if checkpoint_mode == "table":
+        out = _materialize(df, checkpoint_mode)
+        return out, out.agg(*aggs).first().asDict()
+    name = f"__counts_{uuid.uuid4().hex}"
+    observed = df.observe(name, *aggs)
+    out = _materialize(observed, checkpoint_mode)
+    row = observed._jdf.queryExecution().observedMetrics().get(name).get()
+    return out, {k: row.get(i) for i, k in enumerate(metrics)}
+
+
+def _round_counts() -> dict[str, F.Column]:
+    """Observed metrics of one label-propagation round over its output
+    ``(u, comp, nbrs, old, nmax)``: ``lowered``, the nodes whose comp the
+    round lowered, and ``unsettled``, the lowered nodes with a neighbour
+    whose old comp was above the new one. When ``unsettled`` is 0 the
+    next round would lower nothing: a node lowers only by a smaller
+    neighbour label, a neighbour that kept its label had it in the
+    node's own min already, and every neighbour of a settled node held a
+    label no greater than the settled node's new one. So the round
+    proves the fixpoint itself, without a confirm round."""
+    lowered = F.col("comp") < F.col("old")
+    return {
+        "lowered": F.coalesce(F.sum(lowered.cast("int")), F.lit(0)),
+        "unsettled": F.coalesce(
+            F.sum((lowered & (F.col("nmax") > F.col("comp"))).cast("int")), F.lit(0)
+        ),
+    }
+
+
+def _cc_state(pairs: DataFrame) -> DataFrame:
+    """Vertex state ``(u, comp, nbrs, old, nmax)`` of min-label
+    propagation, built in ONE groupBy over the symmetrised pairs:
+    ``nbrs`` is u's adjacency list and ``comp = least(u, min(nbrs))``, so
+    the build is already the first propagation round from identity labels
+    (``old = u``, ``nmax = max(nbrs)``: the previous labels, for
+    :func:`_round_counts`).
+
+    A NULL endpoint becomes the node ``(NULL, NULL)`` with no neighbours,
+    and is nobody's neighbour: NULL ids never join components."""
+    a, b = F.col("id_a"), F.col("id_b")
     both = F.array(
-        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+        F.struct(a.alias("u"), F.when(a.isNotNull(), b).alias("v")),
+        F.struct(b.alias("u"), F.when(b.isNotNull(), a).alias("v")),
     )
-    return pairs.select(F.explode(both).alias("__e")).select(
-        "__e.src", "__e.dst"
-    )
-
-
-def _label_seed(edges: DataFrame) -> DataFrame:
-    """Initial labels: every node its own component."""
     return (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
+        pairs.select(F.explode(both).alias("__e"))
+        .select("__e.u", "__e.v")
+        .groupBy("u")
+        .agg(
+            F.least(F.col("u"), F.min("v")).alias("comp"),
+            F.collect_list("v").alias("nbrs"),
+            F.col("u").alias("old"),
+            F.max("v").alias("nmax"),
+        )
     )
 
 
-def _label_iteration_flagged(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """ONE min-label-propagation round, pre-materialization, with a
-    per-node ``__chg`` flag (did this round lower the node's comp?).
-    The flag rides the SAME join that computes the new labels, so the
-    loop's convergence check is a filter over the already-materialized
-    round result instead of the round-16-and-earlier separate
-    new⋈old join — one full node-sized equi-join per iteration removed
-    (round 17; at 21 rounds on the kNN dup graph that join was ~40% of
-    the loop's per-round wall)."""
-    neighbor_min = (
-        edges.join(labels, edges.dst == labels.id)
-        .groupBy("src")
-        .agg(F.min("comp").alias("nmin"))
+def _cc_round(state: DataFrame) -> DataFrame:
+    """ONE min-label-propagation round over the vertex state, as ONE
+    groupBy (a Pregel superstep on a dataflow engine, as in Pregelix):
+    every node sends its ``comp`` to each neighbour, the messages are
+    unioned with each node's own row (which carries ``nbrs`` and the
+    current comp), and ``groupBy(u)`` takes ``comp = min(message)``.
+    Output ``(u, comp, nbrs, old, nmax)``: ``old`` is the comp before the
+    round and ``nmax`` the largest neighbour message, for
+    :func:`_round_counts`."""
+    nbrs_type = state.schema["nbrs"].dataType
+    comp_type = state.schema["comp"].dataType
+    msgs = state.select(
+        F.explode("nbrs").alias("u"),
+        F.col("comp").alias("msg"),
+        F.lit(None).cast(nbrs_type).alias("nbrs"),
+        F.lit(None).cast(comp_type).alias("old"),
     )
-    nmin = F.coalesce(F.col("nmin"), F.col("comp"))
-    return labels.join(
-        neighbor_min, labels.id == neighbor_min.src, "left"
-    ).select(
-        "id",
-        F.least(F.col("comp"), nmin).alias("comp"),
-        (nmin < F.col("comp")).alias("__chg"),
+    own = state.select(
+        "u", F.col("comp").alias("msg"), "nbrs", F.col("comp").alias("old")
     )
-
-
-def _label_iteration(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """ONE min-label-propagation round, pre-materialization: each node
-    adopts the min comp among itself and its neighbors. Factored out of
-    the :func:`dup_components` loop so the committed plan-audit artifact
-    (:func:`dup_components_iteration_frame`) can never drift from the
-    plan the loop actually runs (the loop runs the flagged twin above —
-    same joins, one extra projected column)."""
-    return _label_iteration_flagged(edges, labels).select("id", "comp")
+    return (
+        msgs.unionByName(own)
+        .groupBy("u")
+        .agg(
+            F.min("msg").alias("comp"),
+            F.first("nbrs", ignorenulls=True).alias("nbrs"),
+            F.min("old").alias("old"),
+            F.max(F.when(F.col("old").isNull(), F.col("msg"))).alias("nmax"),
+        )
+    )
 
 
 def dup_components_iteration_frame(pairs: DataFrame) -> DataFrame:
-    """The UNTRUNCATED first-iteration plan of the label algorithm, for
-    plan audits (VERDICT r15 "What's wrong" #1): ``dup_components``
-    localCheckpoints every round, so the final frame's committed plan
-    dump collapses to a 13-line ``Scan ExistingRDD`` stub and the
-    standing no-cartesian/no-BNLJ greps over ``bench_plans/`` verify
-    nothing about the query's real joins. This builder composes the SAME
-    edge build (unmaterialized) + seed + one propagation round the loop
-    runs (via the shared :func:`_label_edges` / :func:`_label_seed` /
-    :func:`_label_iteration` helpers), exposing the full join shape —
-    candidate self-join upstream included — to ``bench.py --profile``.
-    Audit-only: never executed in the timed path."""
-    edges = _label_edges(pairs)
-    return _label_iteration(edges, _label_seed(edges))
+    """The UNTRUNCATED plan of the label algorithm's state build plus one
+    propagation round, for plan audits: ``dup_components`` materialises
+    every round, so the final frame's plan is a checkpoint-scan stub and
+    the no-cartesian/no-BNLJ greps over ``bench_plans/`` would verify
+    nothing about the query's real shuffles. This composes the SAME
+    :func:`_cc_state` + :func:`_cc_round` the loop runs, unmaterialised,
+    exposing the full shape (candidate self-join upstream included) to
+    ``bench.py --profile``. Audit-only: never executed in the timed path."""
+    return _cc_round(_cc_state(pairs))
 
 
 def dup_components(
@@ -1660,12 +1708,24 @@ def dup_components(
     checkpoint_mode: str = "local",
     algorithm: str = "label",
 ) -> DataFrame:
-    """Connected components over a dup-pair graph (id_a, id_b).
+    """Connected components over a dup-pair graph (id_a, id_b) →
+    ``(id, comp)``, comp = the min id of id's component. A NULL id is
+    returned as ``(NULL, NULL)`` and joins no component.
 
     ``algorithm="label"`` (default): iterative min-label propagation — each
     node adopts the min label among itself and its neighbors until
-    fixpoint. O(diameter) join rounds; right for the shallow clique/chain
-    graphs near-dedup produces.
+    fixpoint, one hop per round; right for the shallow clique/chain
+    graphs near-dedup produces. The state is one frame ``(u, comp, nbrs,
+    old, nmax)`` (:func:`_cc_state`, whose build is round 1) and every further
+    round is ONE groupBy over state plus neighbour messages
+    (:func:`_cc_round`) — one exchange and one materialising action per
+    round, no per-round join. The lowered and unsettled label counts
+    (:func:`_round_counts`) are observed on that same action, so
+    convergence costs no job (one per round under ``"table"``, see
+    :func:`_materialize_observed`), and a round with no unsettled label ends
+    the loop without a confirm round. ``max_iter`` bounds the changing
+    rounds (the build counts as round 1); a graph whose components need
+    more hops raises ``ValueError``.
 
     ``algorithm="star"``: the large-star/small-star alternation (Kiveris
     et al. 2014, "Connected Components in MapReduce and Beyond") —
@@ -1674,69 +1734,57 @@ def dup_components(
     propagation needs one round per hop. Same plain groupBy+join building
     blocks, no RDDs.
 
-    Scale notes (SURVEY §7.4): the working frame is checkpoint-truncated
-    every iteration (``checkpoint_mode``, see :func:`_materialize`) to
-    stop lineage blowup.
+    Scale notes (SURVEY §7.4): the working frame is materialised and
+    lineage-truncated every round (``checkpoint_mode``, see
+    :func:`_materialize`). Only the modes that run an action are accepted
+    (``"local"``, ``"eager"``, ``"reliable"``, ``"table"``): the
+    convergence counts are observed on that action.
     """
+    if algorithm not in ("label", "star"):
+        raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
+    if checkpoint_mode not in _CC_CHECKPOINT_MODES:
+        raise ValueError(
+            f"dup_components needs a checkpoint_mode that runs an action, one "
+            f"of {_CC_CHECKPOINT_MODES}; got {checkpoint_mode!r}"
+        )
+    if max_iter < 1:
+        # max_iter=0 used to skip the loop AND the nonconvergence guard,
+        # silently returning identity labels — the exact wrong-components
+        # class the guard exists to kill
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     if algorithm == "star":
         labels, _iters = _cc_star(pairs, max_iter, checkpoint_mode)
         return labels
-    if algorithm != "label":
-        raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
-    edges = _label_edges(pairs)
-    # materialize the edge list ONCE before iterating (round 15): edges
-    # joins into EVERY round's neighbor-min, so an unmaterialized edge
-    # frame re-runs its whole upstream (the banded minhash candidate
-    # self-join, in the dedup_minhash_components_* queries) once per
-    # iteration — the star path already did this; measured on the 100×
-    # fixture the fix cut dedup_minhash_components_md5 87 → 19 s warm
-    # (4.6×; sf0.1 6.6 → 3.8 s) with bit-identical labels
-    edges = _materialize(edges, checkpoint_mode)
-    labels = _label_seed(edges)
     spark = pairs.sparkSession
     spark.sparkContext.setCheckpointDir(
         spark.conf.get("spark.local.dir", "/tmp") + "/snowfall-cc-checkpoints"
     )
-    if max_iter < 1:
-        # review r15: max_iter=0 used to skip the loop AND the
-        # nonconvergence guard (changed initialized to 0), silently
-        # returning identity labels — the exact wrong-components class
-        # the guard exists to kill
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    changed = 0
-    # max_iter + 1 rounds: convergence is only PROVEN by a round with
-    # zero changes, so a component whose min needs exactly max_iter hops
-    # legitimately spends max_iter changing rounds + 1 confirm round
-    # (review r15: the original guard raised on that boundary case even
-    # though the labels were already correct); the raise below therefore
-    # fires only when diameter truly exceeds max_iter
-    for _ in range(max_iter + 1):
-        # the __chg flag is computed inside the round's own join
-        # (_label_iteration_flagged) and read back from the materialized
-        # result — no separate new⋈old comparison join per round
-        flagged = _materialize(
-            _label_iteration_flagged(edges, labels), checkpoint_mode
+    # round 1: the state build (the pair upstream runs once, here)
+    state, seen = _materialize_observed(
+        _cc_state(pairs), checkpoint_mode, **_round_counts()
+    )
+    rounds = 1
+    # rounds 2 .. max_iter + 1: a component whose min needs exactly
+    # max_iter hops spends max_iter changing rounds, plus one confirm
+    # round unless its last changing round is already settled
+    while seen["unsettled"] and rounds <= max_iter:
+        state, seen = _materialize_observed(
+            _cc_round(state), checkpoint_mode, **_round_counts()
         )
-        changed = flagged.filter(F.col("__chg")).limit(1).count()
-        labels = flagged.select("id", "comp")
-        if changed == 0:
-            break
-    if changed != 0:
-        # Round 15: label propagation moves the min ONE hop per round, so
-        # a component whose min-to-farthest-node distance exceeds max_iter
-        # used to return silently WRONG labels (invisible on the shallow
-        # clique/chain graphs near-dedup produces — exactly the kind of
-        # graph entity-resolution pipelines do NOT produce). Fail loudly:
-        # wrong components poison every downstream survivor/drop decision.
+        rounds += 1
+    if seen["lowered"] and rounds > max_iter:
+        # label propagation moves the min ONE hop per round, so a deeper
+        # component would come back with silently WRONG labels, poisoning
+        # every downstream survivor/drop decision. Fail loudly — also when
+        # round max_iter + 1 happened to settle the last labels, so that
+        # max_iter bounds the hops whatever the graph's shape.
         raise ValueError(
             f"dup_components(algorithm='label') did not converge within "
             f"max_iter={max_iter} changing rounds (+1 confirm round) — "
             f"the graph has a component with diameter > {max_iter}; use "
-            "algorithm='star' (O(log d) rounds) or raise max_iter. "
-            "NOTE (behavior change, round 15): deep graphs that "
-            "previously returned best-effort labels now raise here."
+            "algorithm='star' (O(log d) rounds) or raise max_iter."
         )
-    return labels
+    return state.select(F.col("u").alias("id"), "comp")
 
 
 def _cc_star(
@@ -1775,8 +1823,8 @@ def _cc_star(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    e = _materialize(e, checkpoint_mode)
-    n_e = e.count()
+    e, seen = _materialize_observed(e, checkpoint_mode, n=F.count(F.lit(1)))
+    n_e = seen["n"]
     # node set from the RAW pairs (not e) so degenerate self-pairs still
     # get a label, matching the label-propagation variant
     nodes = pairs.select(F.col("id_a").alias("id")).union(
@@ -1821,15 +1869,16 @@ def _cc_star(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        small = _materialize(small, checkpoint_mode)
+        small, seen = _materialize_observed(
+            small, checkpoint_mode, n=F.count(F.lit(1))
+        )
         # convergence = small == e as SETS (both are .distinct() products).
-        # Count-gate the anti-join (round 17): a differing edge count
-        # proves non-convergence for the cost of one cheap count over the
-        # just-materialized frame; only count-equal rounds pay ONE
-        # exceptAll (|small| = |e| ∧ small∖e = ∅ ⇒ equality — the second
-        # direction of the old two-sided check is implied), so the
-        # progress rounds skip both edge-list anti-joins entirely.
-        n_small = small.count()
+        # Count-gate the anti-join: a differing edge count (observed on
+        # the materialising action, no job of its own) proves
+        # non-convergence; only count-equal rounds pay ONE exceptAll
+        # (|small| = |e| ∧ small∖e = ∅ ⇒ equality — the second direction
+        # is implied), so the progress rounds skip the anti-join entirely.
+        n_small = seen["n"]
         unchanged = (
             n_small == n_e and small.exceptAll(e).limit(1).count() == 0
         )
