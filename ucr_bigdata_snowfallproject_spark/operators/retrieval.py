@@ -128,8 +128,18 @@ def bm25_corpus_stats(
         # issuing many inline bm25 calls (the production path is a
         # PERSISTED index via index_store.save_bm25_stats anyway).
         base = _materialize(base, "eager")
-    tf = base.select(F.col(id_col), F.explode("__tf").alias("__e")).select(
-        F.col(id_col), F.col("__e.term").alias("term"), F.col("__e.tf").alias("tf")
+    # explode_outer + a filter on the generated column, not explode: for
+    # explode the optimizer infers size(__tf) > 0 below the Generate and
+    # pushes it through the projections above, inlining the tokenize +
+    # array_sort into the run lambdas — recomputed once per array element
+    # (60 sf0.001 docs: tf count 61 s vs 2 s). A doc with no runs yields
+    # one NULL __e here and is dropped by the filter: the rows are the same.
+    tf = (
+        base.select(F.col(id_col), F.explode_outer("__tf").alias("__e"))
+        .filter(F.col("__e").isNotNull())
+        .select(
+            F.col(id_col), F.col("__e.term").alias("term"), F.col("__e.tf").alias("tf")
+        )
     )
     lens = base.filter(F.col("dl") > 0).select(F.col(id_col), "dl")
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
