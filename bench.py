@@ -422,6 +422,46 @@ def warm_session(spark) -> None:
     spark.range(32 * 100).repartition(32).select(_warm("id")).count()
 
 
+def dump_profile_plans(spark, sf_dir: str, out_dir: str,
+                       names: list[str]) -> list[str]:
+    """Plan-audit pass (VERDICT r06 #8): write the FINAL physical plan of
+    each query in ``names``, plus every plan-audit variant whose base
+    query is among them, to ``<out_dir>/<name>.plan.txt``; return the
+    dumped names in write order. ``bench.py --profile`` runs it over
+    HEADLINE at sf0.1, ``tests/test_bench_bands.py`` at sf0.001.
+
+    The audit is mechanical (grep for Exchange/CartesianProduct/
+    partition-less Window instead of re-deriving plans by hand). No
+    timings — each frame is run once (count() so AQE's final plan is
+    recorded), and session state is cleared between queries like the
+    timed path. The dumps are the pass's only files that outlive the
+    process (side-effect queries write to temporary scratch directories
+    removed at exit), so a caller's ``out_dir`` decides where they go."""
+    from ucr_bigdata_snowfallproject_spark.plans import checks
+
+    os.makedirs(out_dir, exist_ok=True)
+    # a variant rides along only when its base query is in ``names`` (so
+    # --only single-query dumps stay single-query)
+    variants = {
+        k: v for k, v in plan_audit_variants().items()
+        if any(k.startswith(h) for h in names)
+    }
+    dumped = list(names) + sorted(variants)
+    for name in dumped:
+        fn = variants[name] if name in variants else REGISTRY[name][0]
+        df = fn(spark, sf_dir)
+        df.count()  # materialize so AQE's final plan is recorded
+        path = os.path.join(out_dir, f"{name}.plan.txt")
+        with open(path, "w") as fh:
+            # dedupe repeated cached-subplan reprints (VERDICT r11 #4:
+            # the capstone's raw dump was 28.6 MB of 11k InMemoryScan
+            # body copies); first occurrences stay verbatim
+            fh.write(checks.dump_str(df))
+        clear_session_state(spark)
+        print(f"# [profile] {name} -> {path}", file=sys.stderr)
+    return dumped
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # 3 warm passes: a TRUE median — robust to the one-off GC/worker-pool
@@ -438,48 +478,19 @@ def main() -> None:
         unknown = only - set(HEADLINE)
         if unknown:
             raise SystemExit(f"--only names not in HEADLINE: {sorted(unknown)}")
-        HEADLINE[:] = [n for n in HEADLINE if n in only]
+        names = [n for n in HEADLINE if n in only]
+    else:
+        names = list(HEADLINE)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
     spark = get_spark(app_name="snowfall-bench")
     warm_session(spark)
 
     if "--profile" in sys.argv:
-        # Plan-audit mode (VERDICT r06 #8): dump every headline query's
-        # FINAL physical plan to a directory so the per-round plan audit
-        # is mechanical (grep for Exchange/CartesianProduct/partition-less
-        # Window instead of re-deriving plans by hand). No timings — the
-        # frames are only planned (count() to materialize AQE), and
-        # session state is cleared between queries like the timed path.
-        from ucr_bigdata_snowfallproject_spark.plans import checks
-
         prof_dir = os.environ.get("SPARK_GRAFT_PROFILE_DIR", "bench_plans")
-        os.makedirs(prof_dir, exist_ok=True)
-        # a variant rides along only when its base query is in this run's
-        # HEADLINE (so --only single-query dumps stay single-query)
-        variants = {
-            k: v for k, v in plan_audit_variants().items()
-            if any(k.startswith(h) for h in HEADLINE)
-        }
-        for name in HEADLINE + sorted(variants):
-            if name in variants:
-                fn = variants[name]
-                df = fn(spark, sf_dir)
-                df.count()
-            else:
-                fn, _ = REGISTRY[name]
-                df = fn(spark, sf_dir)
-                df.count()  # materialize so AQE's final plan is recorded
-            with open(os.path.join(prof_dir, f"{name}.plan.txt"), "w") as fh:
-                # dedupe repeated cached-subplan reprints (VERDICT r11 #4:
-                # the capstone's raw dump was 28.6 MB of 11k InMemoryScan
-                # body copies); first occurrences stay verbatim
-                fh.write(checks.dump_str(df))
-            clear_session_state(spark)
-            print(f"# [profile] {name} -> {prof_dir}/{name}.plan.txt",
-                  file=sys.stderr)
+        dumped = dump_profile_plans(spark, sf_dir, prof_dir, names)
         print(json.dumps({"metric": "profile_plans",
-                          "value": len(HEADLINE) + len(variants),
+                          "value": len(dumped),
                           "unit": "plans", "dir": prof_dir, "sf": sf},
                          separators=(",", ":")))
         spark.stop()
@@ -487,7 +498,7 @@ def main() -> None:
 
     def run_suite(tag: str) -> dict[str, float]:
         timings: dict[str, float] = {}
-        for name in HEADLINE:
+        for name in names:
             fn, _ = REGISTRY[name]
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
@@ -515,7 +526,7 @@ def main() -> None:
     if warm_runs:
         warm = {
             name: round(statistics.median(r[name] for r in warm_runs), 3)
-            for name in HEADLINE
+            for name in names
         }
         metric, value, queries = (
             "headline_suite_warm_median_sec",
@@ -545,7 +556,7 @@ def main() -> None:
         if spec is not None and sf == spec.get("sf"):
             from tools.bench_bands import verdict as band_verdict
 
-            v = band_verdict(warm, spec, HEADLINE)
+            v = band_verdict(warm, spec, names)
             detail["host_ratio"] = v["host_ratio"]
             detail["host_ratios"] = v["host_ratios"]
             detail["out_of_band"] = v["out_of_band"]

@@ -2,12 +2,20 @@
 Python, no Spark (VERDICT r08 #2). The decisive scenario: a 2× slowdown
 on ONE query must trip out_of_band even when the whole suite is riding a
 simulated 1.3× uniform host drift — exactly the case the r8 width-floor
-rule absorbed silently."""
+rule absorbed silently.
+
+The two plan-audit tests are the exception: they run the
+``bench.py --profile`` plan pass (:func:`bench.dump_profile_plans`) over
+HEADLINE at sf0.001 on the session Spark fixture, into a temporary
+directory, and audit those dumps."""
 
 from __future__ import annotations
 
 import json
 import os
+
+import pytest
+from conftest import SF_SMOKE
 
 from tools.bench_bands import (
     band_limits,
@@ -200,15 +208,28 @@ def test_checked_in_spec_is_coherent():
     assert all(r == 1.0 for r in v["host_ratios"].values())
 
 
-def test_bench_plans_cover_headline():
-    """VERDICT r10 #2 (plan-audit freshness): every HEADLINE query has a
-    dumped physical plan in bench_plans/ — `bench.py --profile` dumps
-    ALL of HEADLINE, so a missing dump means the audit was not re-run
-    after a headline addition (exactly how the two heaviest r10 queries
-    shipped with an unaudited plan)."""
+@pytest.fixture(scope="module")
+def plans_dir(spark, tmp_path_factory):
+    """One profile pass per module: every HEADLINE query's final physical
+    plan (plus the audit variants), dumped by the same code path as
+    ``bench.py --profile`` but at sf0.001 and into a temporary directory,
+    so the audit needs no pre-built, git-ignored ``bench_plans/``."""
     import bench
 
-    plans_dir = os.path.join(os.path.dirname(__file__), "..", "bench_plans")
+    out = str(tmp_path_factory.mktemp("bench_plans"))
+    bench.dump_profile_plans(spark, SF_SMOKE, out, bench.HEADLINE)
+    return out
+
+
+def test_bench_plans_cover_headline(plans_dir):
+    """VERDICT r10 #2 (plan-audit freshness): every HEADLINE query has a
+    dumped physical plan — the profile pass dumps ALL of HEADLINE, so a
+    missing dump means a headline query is left out of the audit
+    (exactly how the two heaviest r10 queries shipped with an unaudited
+    plan). The pass runs on every Tier-1 run (the ``plans_dir``
+    fixture), so the audit cannot go stale."""
+    import bench
+
     dumped = {f[: -len(".plan.txt")] for f in os.listdir(plans_dir)
               if f.endswith(".plan.txt")}
     missing = sorted(set(bench.HEADLINE) - dumped)
@@ -240,16 +261,15 @@ def test_bench_plans_cover_headline():
         )
 
 
-def test_dedupe_plan_text_keeps_first_occurrences():
+def test_dedupe_plan_text_keeps_first_occurrences(plans_dir):
     """plans.checks.dedupe_plan_text (VERDICT r11 #4): every distinct
     normalized TREE line of the input survives in the output — eliding
     only ever removes a run whose identical (modulo node/expression ids
     and runtime stats) text appeared earlier, so a CartesianProduct or
     any other audit-relevant node inside a cached body cannot be hidden
-    by the dedupe. Replayed on the heaviest checked-in dump."""
+    by the dedupe. Replayed on the heaviest dump of the profile pass."""
     from ucr_bigdata_snowfallproject_spark.plans import checks
 
-    plans_dir = os.path.join(os.path.dirname(__file__), "..", "bench_plans")
     biggest = max(
         (f for f in os.listdir(plans_dir) if f.endswith(".plan.txt")),
         key=lambda f: os.path.getsize(os.path.join(plans_dir, f)),
