@@ -180,9 +180,10 @@ def _union_find_labels(edges):
 
 
 def test_cc_star_matches_label_prop_on_random_graphs(spark):
-    """VERDICT r02 #7: the large-star/small-star variant produces identical
-    components to the iterative form, property-tested on seeded random
-    graphs against a driver-side union-find."""
+    """The seeded random graphs the removed star variant was checked on:
+    label propagation at the default round budget gives the same
+    components as at a generous one, and both equal a driver-side
+    union-find."""
     import random
 
     for seed in (7, 42, 99):
@@ -197,68 +198,54 @@ def test_cc_star_matches_label_prop_on_random_graphs(spark):
         edges = [(a, b) for a, b in edges if a != b]
         truth = _union_find_labels(edges)
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        label = {
+        wide = {
             r.id: r.comp
             for r in dedup_ops.dup_components(pairs, max_iter=100).collect()
         }
-        star = {
-            r.id: r.comp
-            for r in dedup_ops.dup_components(pairs, algorithm="star").collect()
-        }
-        assert label == truth, f"seed {seed}: label-prop diverged"
-        assert star == truth, f"seed {seed}: star diverged"
+        default = {r.id: r.comp for r in dedup_ops.dup_components(pairs).collect()}
+        assert wide == truth, f"seed {seed}: max_iter=100 diverged"
+        assert default == truth, f"seed {seed}: default max_iter diverged"
 
 
-def test_cc_star_converges_in_log_rounds_on_chain(spark):
-    """The point of the star variant: a 100-node chain needs ~99 label-prop
-    rounds (one hop per round) but O(log d) star rounds. Pin the round
-    count so a regression back to linear convergence fails loudly."""
+def test_dup_components_converges_in_log_rounds_on_chain(spark):
+    """The label links make depth cost O(log d) rounds: a sorted 100-node
+    chain, which needs 99 one-hop rounds without them, settles in 12
+    (11 changing rounds plus the confirm round), inside the default
+    max_iter. Pin the round count so a regression back to linear
+    convergence fails loudly."""
     n = 100
     edges = [(i, i + 1) for i in range(n - 1)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    labels, rounds = dedup_ops._cc_star(pairs, max_iter=20)
-    got = {r.id: r.comp for r in labels.collect()}
-    assert got == {i: 0 for i in range(n)}
-    assert rounds <= 8, f"star took {rounds} rounds on a {n}-chain"
+    labels, rounds = dedup_ops._cc_labels(pairs, 20, "local")
+    assert {r.id: r.comp for r in labels.collect()} == {i: 0 for i in range(n)}
+    assert rounds == 12, f"{rounds} rounds on a {n}-chain"
 
 
 def test_dup_components_label_raises_on_nonconvergence(spark):
-    """Round 15: label propagation moves the component min one hop per
-    round, so a chain deeper than max_iter used to return silently WRONG
-    labels (node 29 of a 30-chain still carried a non-min comp after 20
-    rounds) — and wrong components poison every downstream survivor/drop
-    decision. The operator must fail loudly instead, naming the star
-    escape hatch; star itself handles the same graph inside the default
-    round budget."""
+    """A graph that needs more than max_iter changing rounds used to come
+    back with silently WRONG labels, and wrong components poison every
+    downstream survivor/drop decision. The operator must fail loudly
+    instead: a 101-node chain at max_iter=2 raises."""
     import pytest
 
-    n = 30
-    edges = [(i, i + 1) for i in range(n - 1)]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    with pytest.raises(ValueError, match="did not converge.*star"):
-        dedup_ops.dup_components(pairs, max_iter=20)
-    star = {
-        r.id: r.comp
-        for r in dedup_ops.dup_components(pairs, algorithm="star").collect()
-    }
-    assert star == {i: 0 for i in range(n)}
-    # ample max_iter still converges and matches ground truth
-    label = {
-        r.id: r.comp
-        for r in dedup_ops.dup_components(pairs, max_iter=40).collect()
-    }
-    assert label == star
-    # the exact boundary (diameter == max_iter) must CONVERGE, not raise:
-    # max_iter changing rounds + the one confirm round the loop allows
-    # (review r15 caught the original guard raising here)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(100)], "id_a long, id_b long"
+    )
+    with pytest.raises(ValueError, match="did not converge.*raise max_iter"):
+        dedup_ops.dup_components(pairs, max_iter=2)
+    # the exact boundary must CONVERGE, not raise: a 6-node chain needs 4
+    # changing rounds, so max_iter=4 converges (plus the one confirm
+    # round the loop allows) and max_iter=3 raises
     bpairs = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "id_a long, id_b long"
     )
     boundary = {
         r.id: r.comp
-        for r in dedup_ops.dup_components(bpairs, max_iter=5).collect()
+        for r in dedup_ops.dup_components(bpairs, max_iter=4).collect()
     }
     assert boundary == {i: 0 for i in range(6)}
+    with pytest.raises(ValueError, match="did not converge"):
+        dedup_ops.dup_components(bpairs, max_iter=3)
     # and the degenerate budget fails loudly instead of returning
     # identity labels silently
     with pytest.raises(ValueError, match="max_iter must be >= 1"):
@@ -272,25 +259,20 @@ def test_dup_components_null_ids_join_no_component(spark):
         [(1, 2), (None, 3), (4, None), (5, 5)], "id_a long, id_b long"
     )
     want = {(1, 1), (2, 1), (3, 3), (4, 4), (5, 5), (None, None)}
-    for alg in ("label", "star"):
-        got = [
-            (r.id, r.comp)
-            for r in dedup_ops.dup_components(pairs, algorithm=alg).collect()
-        ]
-        assert len(got) == len(want) and set(got) == want, alg
+    got = [(r.id, r.comp) for r in dedup_ops.dup_components(pairs).collect()]
+    assert len(got) == len(want) and set(got) == want
 
 
 def test_dup_components_leaves_session_usable_for_mllib(spark):
     """The convergence counts must not leave the session unable to
     serialize: an MLlib LogisticRegressionModel carries the session in its
-    training summary, so scoring with it after dup_components (both
-    algorithms) has to keep working."""
+    training summary, so scoring with it after dup_components has to keep
+    working."""
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.linalg import Vectors
 
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    for alg in ("label", "star"):
-        assert dedup_ops.dup_components(pairs, algorithm=alg).count() == 3
+    assert dedup_ops.dup_components(pairs).count() == 3
     train = spark.createDataFrame(
         [(Vectors.dense([float(i)]), float(i % 2)) for i in range(20)],
         ["features", "label"],
@@ -306,10 +288,9 @@ def test_dup_components_rejects_modes_without_an_action(spark):
     import pytest
 
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    for alg in ("label", "star"):
-        for mode in ("none", "persist"):
-            with pytest.raises(ValueError, match="'local'.*'table'"):
-                dedup_ops.dup_components(pairs, checkpoint_mode=mode, algorithm=alg)
+    for mode in ("none", "persist"):
+        with pytest.raises(ValueError, match="'local'.*'table'"):
+            dedup_ops.dup_components(pairs, checkpoint_mode=mode)
 
 
 def _jobs_in_group(spark, group, fn):
@@ -327,8 +308,8 @@ def test_dup_components_label_one_action_per_round(spark):
     """Each label-propagation round is one exchange plus one materialising
     action, with the convergence counts observed on that action: at most
     two jobs per round, the state build included. A 6-chain plus 50
-    disjoint 2-cliques needs the build + 4 lowering rounds; the last one
-    is settled, so no confirm round runs."""
+    disjoint 2-cliques needs the build, 3 lowering rounds and a confirm
+    round."""
     edges = [(i, i + 1) for i in range(5)] + [
         (100 + 2 * i, 101 + 2 * i) for i in range(50)
     ]
@@ -347,8 +328,9 @@ def test_dup_components_label_one_action_per_round(spark):
 
 def test_dup_components_matches_union_find_under_every_mode(spark):
     """Label propagation equals a driver-side union-find under the
-    materialisation modes it accepts: seeded random graphs, a hub with
-    2,000 leaves, and duplicate pairs in both orientations."""
+    materialisation modes it accepts, at the default max_iter: seeded
+    random graphs, a hub with 2,000 leaves, duplicate pairs in both
+    orientations, and a sorted and a seeded-permuted 100-node chain."""
     import random
 
     graphs = []
@@ -357,6 +339,10 @@ def test_dup_components_matches_union_find_under_every_mode(spark):
         graphs.append(
             [(rng.randrange(100), rng.randrange(200)) for _ in range(50)]
         )
+    graphs.append([(i, i + 1) for i in range(99)])
+    ids = list(range(100))
+    random.Random(5).shuffle(ids)
+    graphs.append([(ids[i], ids[i + 1]) for i in range(99)])
     graphs.append([(7, 10_000 + i) for i in range(2000)])
     graphs.append([(1, 2), (2, 1), (1, 2), (3, 2), (2, 3), (9, 8), (8, 9), (9, 9)])
     # one disjoint union (ids offset per graph): one call per mode
@@ -370,9 +356,7 @@ def test_dup_components_matches_union_find_under_every_mode(spark):
     for mode in ("local", "reliable", "table"):
         got = [
             (r.id, r.comp)
-            for r in dedup_ops.dup_components(
-                pairs, max_iter=100, checkpoint_mode=mode
-            ).collect()
+            for r in dedup_ops.dup_components(pairs, checkpoint_mode=mode).collect()
         ]
         assert len(got) == len(truth), mode
         assert dict(got) == truth, mode
@@ -2416,9 +2400,10 @@ def test_pair_dot_scores_chunked_bit_identical(spark, monkeypatch):
 
 def test_cc_round_takes_neighbourhood_min_and_observes_counts(spark):
     """_cc_round: each node's new comp is the min over its closed
-    neighbourhood's previous comps, and the counts observed on the
-    materialising action are the nodes the round lowered and, of those,
-    the ones with a neighbour whose previous comp exceeds the new one."""
+    neighbourhood's previous comps, where each round links every node to
+    its previous comp; the counts observed on the materialising action
+    are the nodes the round lowered and, of those, the ones that received
+    a message (a link's included) above the new comp."""
     from ucr_bigdata_snowfallproject_spark.operators.dedup import (
         _cc_round, _cc_state, _materialize_observed, _round_counts,
     )
@@ -2432,14 +2417,23 @@ def test_cc_round_takes_neighbourhood_min_and_observes_counts(spark):
     state, seen = _materialize_observed(_cc_state(pairs), "local", **_round_counts())
     before = {u: u for u in adj}
     for _round in range(4):
-        comp = {r.u: r.comp for r in state.collect()}
-        want = {u: min([before[u]] + [before[v] for v in adj[u]]) for u in adj}
+        rows = state.collect()
+        comp = {r.u: r.comp for r in rows}
+        # neighbour messages, plus each node's message to its own label
+        msgs = {u: [before[v] for v in adj[u]] for u in adj}
+        for u, c in before.items():
+            if c != u:
+                msgs[c].append(c)
+        want = {u: min([before[u]] + msgs[u]) for u in adj}
         assert comp == want
         lowered = [u for u in adj if want[u] < before[u]]
         assert seen["lowered"] == len(lowered)
-        assert seen["unsettled"] == sum(
-            max(before[v] for v in adj[u]) > want[u] for u in lowered
-        )
+        assert seen["unsettled"] == sum(max(msgs[u]) > want[u] for u in lowered)
+        for u, c in before.items():
+            if c != u:
+                adj[u].add(c)
+                adj[c].add(u)
+        assert {r.u: set(r.nbrs) for r in rows} == adj
         before = comp
         state, seen = _materialize_observed(_cc_round(state), "local", **_round_counts())
 
@@ -2807,7 +2801,7 @@ def test_minhash_index_artifact_probe_identity(spark, tmp_path):
 
 def test_dedup_pipeline_tiers_reliable_and_table(spark, tmp_path):
     """VERDICT r04 #5: the end-to-end near-dedup pipeline — minhash_dedup
-    survivors AND dup_components labels (both algorithms) — is
+    survivors AND dup_components labels — is
     tier-invariant under the fault-tolerant 'reliable' and
     restart-survivable 'table' materialization modes. The 100 TB
     deployment modes run here, not just in docstrings."""
@@ -2840,14 +2834,11 @@ def test_dedup_pipeline_tiers_reliable_and_table(spark, tmp_path):
     }
     assert base_labels
     for mode in ("reliable", "table"):
-        for alg in ("label", "star"):
-            got = {
-                (r.id, r.comp)
-                for r in dedup_ops.dup_components(
-                    cand, checkpoint_mode=mode, algorithm=alg
-                ).collect()
-            }
-            assert got == base_labels, (mode, alg)
+        got = {
+            (r.id, r.comp)
+            for r in dedup_ops.dup_components(cand, checkpoint_mode=mode).collect()
+        }
+        assert got == base_labels, mode
 
 
 def test_ivf_indexed_probe_identity_and_partition_pruning(spark, tmp_path):

@@ -1614,13 +1614,15 @@ def _materialize_observed(
 def _round_counts() -> dict[str, F.Column]:
     """Observed metrics of one label-propagation round over its output
     ``(u, comp, nbrs, old, nmax)``: ``lowered``, the nodes whose comp the
-    round lowered, and ``unsettled``, the lowered nodes with a neighbour
-    whose old comp was above the new one. When ``unsettled`` is 0 the
-    next round would lower nothing: a node lowers only by a smaller
-    neighbour label, a neighbour that kept its label had it in the
-    node's own min already, and every neighbour of a settled node held a
-    label no greater than the settled node's new one. So the round
-    proves the fixpoint itself, without a confirm round."""
+    round lowered, and ``unsettled``, the lowered nodes that received a
+    message (a neighbour's old comp or a label link) above the new comp.
+    When ``unsettled`` is 0 every label is final: a node that kept its
+    label held no more than any neighbour's old one, so two such
+    neighbours held the same label, and a settled lowered node had all
+    its neighbours (none of them lowered) on one label. Each component
+    therefore ends the round on one label, its min, and the label links
+    the round added can lower nothing. So the round proves the fixpoint
+    itself, without a confirm round."""
     lowered = F.col("comp") < F.col("old")
     return {
         "lowered": F.coalesce(F.sum(lowered.cast("int")), F.lit(0)),
@@ -1633,7 +1635,7 @@ def _round_counts() -> dict[str, F.Column]:
 def _cc_state(pairs: DataFrame) -> DataFrame:
     """Vertex state ``(u, comp, nbrs, old, nmax)`` of min-label
     propagation, built in ONE groupBy over the symmetrised pairs:
-    ``nbrs`` is u's adjacency list and ``comp = least(u, min(nbrs))``, so
+    ``nbrs`` is u's adjacency set and ``comp = least(u, min(nbrs))``, so
     the build is already the first propagation round from identity labels
     (``old = u``, ``nmax = max(nbrs)``: the previous labels, for
     :func:`_round_counts`).
@@ -1651,7 +1653,7 @@ def _cc_state(pairs: DataFrame) -> DataFrame:
         .groupBy("u")
         .agg(
             F.least(F.col("u"), F.min("v")).alias("comp"),
-            F.collect_list("v").alias("nbrs"),
+            F.collect_set("v").alias("nbrs"),
             F.col("u").alias("old"),
             F.max("v").alias("nmax"),
         )
@@ -1662,28 +1664,44 @@ def _cc_round(state: DataFrame) -> DataFrame:
     """ONE min-label-propagation round over the vertex state, as ONE
     groupBy (a Pregel superstep on a dataflow engine, as in Pregelix):
     every node sends its ``comp`` to each neighbour, the messages are
-    unioned with each node's own row (which carries ``nbrs`` and the
-    current comp), and ``groupBy(u)`` takes ``comp = min(message)``.
+    unioned with each node's own row (which carries the current comp),
+    and ``groupBy(u)`` takes ``comp = min(message)``.
+
+    The round also links each node to its label: a node ``u`` whose
+    ``comp`` is another node sends its message to ``comp`` as well, and
+    every node's new adjacency is the set of its messages' senders plus
+    its own label. The edge ``u``–``comp_u`` lies inside the component,
+    and over it the next round hands ``u`` the label of its label, so
+    labels jump along min-pointers (the pointer-jumping depth of
+    Kiveris et al. 2014, "Connected Components in MapReduce and Beyond").
+
     Output ``(u, comp, nbrs, old, nmax)``: ``old`` is the comp before the
-    round and ``nmax`` the largest neighbour message, for
-    :func:`_round_counts`."""
-    nbrs_type = state.schema["nbrs"].dataType
+    round and ``nmax`` the largest message received, the label links
+    included, for :func:`_round_counts`."""
     comp_type = state.schema["comp"].dataType
+    linked = F.col("comp") != F.col("u")
     msgs = state.select(
-        F.explode("nbrs").alias("u"),
+        F.explode(
+            F.when(linked, F.array_union("nbrs", F.array("comp"))).otherwise(
+                F.col("nbrs")
+            )
+        ).alias("u"),
         F.col("comp").alias("msg"),
-        F.lit(None).cast(nbrs_type).alias("nbrs"),
+        F.col("u").alias("src"),
         F.lit(None).cast(comp_type).alias("old"),
     )
     own = state.select(
-        "u", F.col("comp").alias("msg"), "nbrs", F.col("comp").alias("old")
+        "u",
+        F.col("comp").alias("msg"),
+        F.when(linked, F.col("comp")).alias("src"),
+        F.col("comp").alias("old"),
     )
     return (
         msgs.unionByName(own)
         .groupBy("u")
         .agg(
             F.min("msg").alias("comp"),
-            F.first("nbrs", ignorenulls=True).alias("nbrs"),
+            F.collect_set("src").alias("nbrs"),
             F.min("old").alias("old"),
             F.max(F.when(F.col("old").isNull(), F.col("msg"))).alias("nmax"),
         )
@@ -1691,9 +1709,9 @@ def _cc_round(state: DataFrame) -> DataFrame:
 
 
 def dup_components_iteration_frame(pairs: DataFrame) -> DataFrame:
-    """The UNTRUNCATED plan of the label algorithm's state build plus one
-    propagation round, for plan audits: ``dup_components`` materialises
-    every round, so the final frame's plan is a checkpoint-scan stub and
+    """The UNTRUNCATED plan of the state build plus one propagation
+    round, for plan audits: ``dup_components`` materialises every
+    round, so the final frame's plan is a checkpoint-scan stub and
     the no-cartesian/no-BNLJ greps over ``bench_plans/`` would verify
     nothing about the query's real shuffles. This composes the SAME
     :func:`_cc_state` + :func:`_cc_round` the loop runs, unmaterialised,
@@ -1702,37 +1720,63 @@ def dup_components_iteration_frame(pairs: DataFrame) -> DataFrame:
     return _cc_round(_cc_state(pairs))
 
 
+def _cc_labels(
+    pairs: DataFrame, max_iter: int, checkpoint_mode: str
+) -> tuple[DataFrame, int]:
+    """The loop of :func:`dup_components`; returns ``(labels, rounds)``
+    so tests can pin the round count."""
+    spark = pairs.sparkSession
+    spark.sparkContext.setCheckpointDir(
+        spark.conf.get("spark.local.dir", "/tmp") + "/snowfall-cc-checkpoints"
+    )
+    # round 1: the state build (the pair upstream runs once, here)
+    state, seen = _materialize_observed(
+        _cc_state(pairs), checkpoint_mode, **_round_counts()
+    )
+    rounds = 1
+    # rounds 2 .. max_iter + 1: max_iter changing rounds, plus one
+    # confirm round unless the last changing round is already settled
+    while seen["unsettled"] and rounds <= max_iter:
+        state, seen = _materialize_observed(
+            _cc_round(state), checkpoint_mode, **_round_counts()
+        )
+        rounds += 1
+    if seen["lowered"] and rounds > max_iter:
+        # unfinished labels would poison every downstream survivor/drop
+        # decision. Fail loudly — also when round max_iter + 1 happened
+        # to settle the last labels, so that max_iter bounds the changing
+        # rounds whatever the graph's shape.
+        raise ValueError(
+            f"dup_components did not converge within max_iter={max_iter} "
+            "changing rounds (+1 confirm round); raise max_iter."
+        )
+    return state.select(F.col("u").alias("id"), "comp"), rounds
+
+
 def dup_components(
     pairs: DataFrame,
     max_iter: int = 20,
     checkpoint_mode: str = "local",
-    algorithm: str = "label",
 ) -> DataFrame:
     """Connected components over a dup-pair graph (id_a, id_b) →
     ``(id, comp)``, comp = the min id of id's component. A NULL id is
     returned as ``(NULL, NULL)`` and joins no component.
 
-    ``algorithm="label"`` (default): iterative min-label propagation — each
-    node adopts the min label among itself and its neighbors until
-    fixpoint, one hop per round; right for the shallow clique/chain
-    graphs near-dedup produces. The state is one frame ``(u, comp, nbrs,
-    old, nmax)`` (:func:`_cc_state`, whose build is round 1) and every further
-    round is ONE groupBy over state plus neighbour messages
-    (:func:`_cc_round`) — one exchange and one materialising action per
-    round, no per-round join. The lowered and unsettled label counts
-    (:func:`_round_counts`) are observed on that same action, so
-    convergence costs no job (one per round under ``"table"``, see
-    :func:`_materialize_observed`), and a round with no unsettled label ends
-    the loop without a confirm round. ``max_iter`` bounds the changing
-    rounds (the build counts as round 1); a graph whose components need
-    more hops raises ``ValueError``.
-
-    ``algorithm="star"``: the large-star/small-star alternation (Kiveris
-    et al. 2014, "Connected Components in MapReduce and Beyond") —
-    converges in O(log diameter) rounds, so deep chain-shaped graphs
-    (entity-resolution style) finish in a handful of shuffles where label
-    propagation needs one round per hop. Same plain groupBy+join building
-    blocks, no RDDs.
+    Iterative min-label propagation with label links: each node adopts
+    the min label among itself and its neighbours, and links to its
+    label, so the next round hands it the label's label — depth costs
+    O(log d) rounds on chain-shaped graphs (a 100-node chain takes 12),
+    and shallow clique graphs settle in two or three. The state is one
+    frame ``(u, comp, nbrs, old, nmax)`` (:func:`_cc_state`, whose build
+    is round 1) and every further round is ONE groupBy over state plus
+    neighbour messages (:func:`_cc_round`) — one exchange and one
+    materialising action per round, no per-round join. The lowered and
+    unsettled label counts (:func:`_round_counts`) are observed on that
+    same action, so convergence costs no job (one per round under
+    ``"table"``, see :func:`_materialize_observed`), and a round with no
+    unsettled label ends the loop without a confirm round. ``max_iter``
+    bounds the changing rounds (the build counts as round 1); a graph
+    that needs more raises ``ValueError``.
 
     Scale notes (SURVEY §7.4): the working frame is materialised and
     lineage-truncated every round (``checkpoint_mode``, see
@@ -1740,8 +1784,6 @@ def dup_components(
     (``"local"``, ``"eager"``, ``"reliable"``, ``"table"``): the
     convergence counts are observed on that action.
     """
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
     if checkpoint_mode not in _CC_CHECKPOINT_MODES:
         raise ValueError(
             f"dup_components needs a checkpoint_mode that runs an action, one "
@@ -1752,146 +1794,8 @@ def dup_components(
         # silently returning identity labels — the exact wrong-components
         # class the guard exists to kill
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    if algorithm == "star":
-        labels, _iters = _cc_star(pairs, max_iter, checkpoint_mode)
-        return labels
-    spark = pairs.sparkSession
-    spark.sparkContext.setCheckpointDir(
-        spark.conf.get("spark.local.dir", "/tmp") + "/snowfall-cc-checkpoints"
-    )
-    # round 1: the state build (the pair upstream runs once, here)
-    state, seen = _materialize_observed(
-        _cc_state(pairs), checkpoint_mode, **_round_counts()
-    )
-    rounds = 1
-    # rounds 2 .. max_iter + 1: a component whose min needs exactly
-    # max_iter hops spends max_iter changing rounds, plus one confirm
-    # round unless its last changing round is already settled
-    while seen["unsettled"] and rounds <= max_iter:
-        state, seen = _materialize_observed(
-            _cc_round(state), checkpoint_mode, **_round_counts()
-        )
-        rounds += 1
-    if seen["lowered"] and rounds > max_iter:
-        # label propagation moves the min ONE hop per round, so a deeper
-        # component would come back with silently WRONG labels, poisoning
-        # every downstream survivor/drop decision. Fail loudly — also when
-        # round max_iter + 1 happened to settle the last labels, so that
-        # max_iter bounds the hops whatever the graph's shape.
-        raise ValueError(
-            f"dup_components(algorithm='label') did not converge within "
-            f"max_iter={max_iter} changing rounds (+1 confirm round) — "
-            f"the graph has a component with diameter > {max_iter}; use "
-            "algorithm='star' (O(log d) rounds) or raise max_iter."
-        )
-    return state.select(F.col("u").alias("id"), "comp")
-
-
-def _cc_star(
-    pairs: DataFrame, max_iter: int = 20, checkpoint_mode: str = "local"
-) -> tuple[DataFrame, int]:
-    """Large-star/small-star connected components; returns
-    ``(labels, rounds)`` so tests can pin the O(log d) convergence claim.
-
-    Each round is two plain groupBy+join passes over the edge list:
-
-    - *large-star*: every node links its strictly-larger neighbors to the
-      minimum of its closed neighborhood — tall trees flatten toward the
-      min in one hop;
-    - *small-star*: every node links its ≤-neighbors (and itself) to that
-      set's minimum — stars re-root on the true component min.
-
-    At fixpoint every edge is (node → component-min), i.e. the graph is a
-    disjoint union of stars rooted at each component's minimum id. All
-    shuffles key on node id (high cardinality); per-node state is one
-    min — partial-aggregable, no adjacency lists are materialized."""
-    spark = pairs.sparkSession
-    spark.sparkContext.setCheckpointDir(
-        spark.conf.get("spark.local.dir", "/tmp") + "/snowfall-cc-checkpoints"
-    )
-    # materialize the RAW pair list once (round 17): both the canonical
-    # edge list below AND the node frame derive from it, and the node
-    # frame is only consumed by the FINAL labels join — unmaterialized,
-    # that join re-ran the whole upstream pair build (the kNN graph, in
-    # dedup_embedding_knn_components) a second time at the final action.
-    pairs = _materialize(pairs, checkpoint_mode)
-    # canonical undirected edge list (u < v), self-loops dropped
-    e = (
-        pairs.select(
-            F.least("id_a", "id_b").alias("u"), F.greatest("id_a", "id_b").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    e, seen = _materialize_observed(e, checkpoint_mode, n=F.count(F.lit(1)))
-    n_e = seen["n"]
-    # node set from the RAW pairs (not e) so degenerate self-pairs still
-    # get a label, matching the label-propagation variant
-    nodes = pairs.select(F.col("id_a").alias("id")).union(
-        pairs.select(F.col("id_b").alias("id"))
-    ).distinct()
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # ---- large-star: (v, m) for every neighbor v > u, m = min(Γ+(u))
-        adj = e.select("u", "v").union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m_large = adj.groupBy("u").agg(
-            F.least(F.first("u"), F.min("v")).alias("m")
-        )
-        large = (
-            adj.filter(F.col("v") > F.col("u"))
-            .join(m_large, "u")
-            .select(F.least("v", "m").alias("u"), F.greatest("v", "m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        large = _materialize(large, checkpoint_mode)
-        # ---- small-star: (v, m) for every neighbor v ≤ u plus u itself,
-        #      m = min({v ∈ Γ(u): v ≤ u} ∪ {u})
-        adj2 = large.select("u", "v").union(
-            large.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        smaller = adj2.filter(F.col("v") < F.col("u"))
-        m_small = smaller.groupBy("u").agg(F.min("v").alias("m"))
-        links = smaller.join(m_small, "u").select(
-            F.col("v"), F.col("m"), F.col("u").alias("center")
-        )
-        small = (
-            links.select(F.least("v", "m").alias("u"), F.greatest("v", "m").alias("v"))
-            .union(
-                links.select(
-                    F.least("center", "m").alias("u"),
-                    F.greatest("center", "m").alias("v"),
-                )
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        small, seen = _materialize_observed(
-            small, checkpoint_mode, n=F.count(F.lit(1))
-        )
-        # convergence = small == e as SETS (both are .distinct() products).
-        # Count-gate the anti-join: a differing edge count (observed on
-        # the materialising action, no job of its own) proves
-        # non-convergence; only count-equal rounds pay ONE exceptAll
-        # (|small| = |e| ∧ small∖e = ∅ ⇒ equality — the second direction
-        # is implied), so the progress rounds skip the anti-join entirely.
-        n_small = seen["n"]
-        unchanged = (
-            n_small == n_e and small.exceptAll(e).limit(1).count() == 0
-        )
-        e = small
-        n_e = n_small
-        if unchanged:
-            break
-    # fixpoint edges are (component-min=u → member=v); isolated mins label
-    # themselves via the left join
-    labels = nodes.join(
-        e.select(F.col("v").alias("id"), F.col("u").alias("comp")), "id", "left"
-    ).select("id", F.coalesce("comp", "id").alias("comp"))
-    return labels, rounds
+    labels, _rounds = _cc_labels(pairs, max_iter, checkpoint_mode)
+    return labels
 
 
 def simhash_expr(col: str, bits: int = 64) -> F.Column:

@@ -2320,15 +2320,15 @@ def dedup_embedding_knn_components(spark: SparkSession, sf_dir: str) -> DataFram
     """X2/X3 embedding-graph near-dedup — the SemDeDup-style composition,
     oracle-backed end-to-end: the int8-IVF corpus kNN graph
     (similarity.ivf_int8_knn_graph) filtered to cosine >= 0.35 becomes
-    the dup-edge set, and dup_components' iterative min-label fixpoint
-    labels the clusters; the oracle replays the WHOLE stack — integer
-    cell assignment, blocked self-join, exact rounded cosines, and a
-    RECURSIVE-CTE transitive closure — in one SQL expression. Two
+    the dup-edge set, and dup_components labels the clusters (the graph
+    is chain-shaped, diameter about 20 at sf0.1; the label links of its
+    min-label propagation settle it in 10 rounds). The oracle replays the
+    WHOLE stack — integer cell assignment, blocked self-join, exact
+    rounded cosines, and a RECURSIVE-CTE transitive closure — in one SQL
+    expression. Two
     deterministic approximate/iterative operators composing into an
     externally hash-verified pipeline is the round-8 thesis in one
     query."""
-    from ..operators import dedup as dedup_ops_local
-
     e = load_table(spark, sf_dir, "embeddings")
     cent_rows = sorted(
         sim_ops.quantize_embeddings(e.filter(F.col("vec_id") < 16), "vec_id")
@@ -2341,15 +2341,7 @@ def dedup_embedding_knn_components(spark: SparkSession, sf_dir: str) -> DataFram
     pairs = knn.filter(F.col("sim") >= 0.35).select(
         F.col("src_id").alias("id_a"), F.col("nbr_id").alias("id_b")
     )
-    # algorithm="star" (round 17): this graph is CHAIN-shaped — the
-    # ε-threshold kNN edges form long paths (measured diameter ~20 at
-    # sf0.1, exactly the label path's max_iter=20 boundary: 21 one-hop
-    # rounds ≈ 23 s of per-round fixed cost, and a marginally deeper
-    # fixture would RAISE the nonconvergence guard). Large-star/small-star
-    # converges in O(log d) rounds (measured 6) with bit-identical labels
-    # (comp = component-min either way; equality pinned in
-    # test_cc_star_matches_label_prop_on_random_graphs).
-    return dedup_ops_local.dup_components(pairs, algorithm="star").select(
+    return dedup_ops.dup_components(pairs).select(
         F.col("id").alias("vec_id"), F.col("comp")
     )
 
