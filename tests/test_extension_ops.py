@@ -326,6 +326,33 @@ def test_dup_components_label_one_action_per_round(spark):
     }
 
 
+def test_dup_components_keeps_a_preset_checkpoint_dir(spark, tmp_path):
+    """A checkpoint dir the user set (a fault-tolerant one, on a cluster)
+    survives ``dup_components(checkpoint_mode="reliable")``, whose
+    rounds are checkpointed into it, and the labels equal the
+    union-find."""
+    sc = spark.sparkContext
+    before = sc._jsc.sc().getCheckpointDir()
+    ckdir = tmp_path / "user-checkpoints"
+    sc.setCheckpointDir(str(ckdir))
+    try:
+        set_to = sc._jsc.sc().getCheckpointDir().get()
+        edges = [(1, 2), (2, 3), (10, 11), (3, 4)]
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        got = {
+            r.id: r.comp
+            for r in dedup_ops.dup_components(
+                pairs, checkpoint_mode="reliable"
+            ).collect()
+        }
+        assert sc._jsc.sc().getCheckpointDir().get() == set_to
+        assert any(ckdir.iterdir()), "no round was checkpointed into the dir"
+        assert got == _union_find_labels(edges)
+    finally:
+        if not before.isEmpty():
+            sc.setCheckpointDir(before.get())
+
+
 def test_dup_components_matches_union_find_under_every_mode(spark):
     """Label propagation equals a driver-side union-find under the
     materialisation modes it accepts, at the default max_iter: seeded
@@ -2402,8 +2429,9 @@ def test_cc_round_takes_neighbourhood_min_and_observes_counts(spark):
     """_cc_round: each node's new comp is the min over its closed
     neighbourhood's previous comps, where each round links every node to
     its previous comp; the counts observed on the materialising action
-    are the nodes the round lowered and, of those, the ones that received
-    a message (a link's included) above the new comp."""
+    are the state's node count, the nodes the round lowered and, of
+    those, the ones that received a message (a link's included) above
+    the new comp."""
     from ucr_bigdata_snowfallproject_spark.operators.dedup import (
         _cc_round, _cc_state, _materialize_observed, _round_counts,
     )
@@ -2426,6 +2454,7 @@ def test_cc_round_takes_neighbourhood_min_and_observes_counts(spark):
                 msgs[c].append(c)
         want = {u: min([before[u]] + msgs[u]) for u in adj}
         assert comp == want
+        assert seen["rows"] == len(rows) == len(adj)
         lowered = [u for u in adj if want[u] < before[u]]
         assert seen["lowered"] == len(lowered)
         assert seen["unsettled"] == sum(max(msgs[u]) > want[u] for u in lowered)

@@ -4,7 +4,8 @@ least nine tenths of the pairs and the median gap exceeds the base's
 interquartile range; failed runs count for neither side), the
 no-regression verdict per metric, the run length and metric set
 coming from the benchmark's own declaration, and the ungated wall
-timings reported as information only."""
+timings, per-process wall time included, reported as information
+only."""
 
 from __future__ import annotations
 
@@ -98,14 +99,24 @@ def test_ungated_timings_are_info_only(capsys):
     assert parse_info("job_s n/a s") == {}
 
     pairs = [
-        {"base": {**_rec(spark_jobs=58), "info": {"job_s": 12.0 + i, "cold_job_s": 25.0}},
-         "change": {**_rec(spark_jobs=36), "info": {"job_s": 11.0 + i, "cold_job_s": 24.0}}}
+        {"base": {**_rec(spark_jobs=58), "wall_s": 50.0 + i,
+                  "info": {"job_s": 12.0 + i, "cold_job_s": 25.0}},
+         "change": {**_rec(spark_jobs=36), "wall_s": 45.0 + 2 * i,
+                    "info": {"job_s": 11.0 + i, "cold_job_s": 24.0}}}
         for i in range(5)
     ]
+    # a failed run's wall time counts for neither side
+    pairs.append({"base": {**_rec(spark_jobs=58), "wall_s": 99.0},
+                  "change": {**_rec(correct=False), "wall_s": 5.0}})
     report("w", pairs, METRICS[1:2])
     out = capsys.readouterr().out
     assert "job_s base: median 14 q1 13 q3 15 (n=5; info, not gated)" in out
     assert "cold_job_s change: median 24 q1 24 q3 24 (n=5; info, not gated)" in out
-    info_lines = [ln for ln in out.splitlines() if ln.startswith(("job_s", "cold_job_s"))]
-    assert len(info_lines) == 4
+    assert ("wall_s base: median 52.0 q1 51.0 q3 53.0 max 54.0 "
+            "(n=5; per process; info, not gated)") in out
+    assert ("wall_s change: median 49.0 q1 47.0 q3 51.0 max 53.0 "
+            "(n=5; per process; info, not gated)") in out
+    info_lines = [ln for ln in out.splitlines()
+                  if ln.startswith(("job_s", "cold_job_s", "wall_s"))]
+    assert len(info_lines) == 6
     assert not any("claimable" in ln or "no-regression" in ln for ln in info_lines)

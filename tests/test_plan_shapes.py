@@ -497,6 +497,48 @@ def test_bm25_unpersisted_tf_tokenizes_once(spark):
     assert plan.count("array_sort(") == 1, plan
 
 
+def test_dup_components_loser_anti_join_broadcasts(spark):
+    """The survivor anti-join against dup_components' losers broadcasts
+    the loser ids from its first plan: no shuffle of the documents side.
+    The labels are a checkpoint whose pre-execution size estimate is the
+    pair upstream's join estimate (petabytes), so without the size-gated
+    broadcast hint the join plans as a SortMergeJoin that shuffles every
+    document's text. With broadcasting switched off the hint is not set
+    and the join stays a SortMergeJoin. Plans are read before any action
+    on the join."""
+    import re
+
+    from ucr_bigdata_snowfallproject_spark.operators import dedup as dedup_ops
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    # a few chains over neighbouring ids: a pair upstream whose estimate
+    # multiplies, as the MinHash candidate self-join's does
+    a = docs.filter(F.col("doc_id") % 100 < 3).select(F.col("doc_id").alias("id_a"))
+    b = docs.select(F.col("doc_id").alias("id_b"))
+    pairs = a.join(b, F.col("id_b") == F.col("id_a") + 1)
+
+    def loser_anti_join():
+        comps = dedup_ops.dup_components(pairs)
+        losers = comps.filter(F.col("id") != F.col("comp")).select(
+            F.col("id").alias("doc_id")
+        )
+        return docs.join(losers, "doc_id", "left_anti")
+
+    df = loser_anti_join()
+    text = checks.explain_str(df, "simple")
+    assert re.search(r"BroadcastHashJoin .*LeftAnti", text), text
+    assert checks.shuffle_count(df) == 0, text
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        text = checks.explain_str(loser_anti_join(), "simple")
+    finally:
+        spark.conf.set(key, before)
+    assert re.search(r"SortMergeJoin .*LeftAnti", text), text
+
+
 def test_int8_rerank_broadcasts_and_no_unintended_cartesian(spark):
     """SQ8 two-stage ANN: the coarse stage is the INTENDED broadcast
     nested-loop (bounded query codes × corpus codes); the rerank stage

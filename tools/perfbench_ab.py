@@ -26,7 +26,9 @@ quartiles, and per metric:
 
 It also prints each side's median and quartiles of the wall timings
 the benchmark prints but does not gate (``job_s``, ``cold_job_s``),
-labelled "info, not gated", with no verdict.
+and of each benchmark process's own wall time (``wall_s``, with its
+maximum, to check against the per-process time budget), labelled
+"info, not gated", with no verdict.
 
 A run that exits non-zero or reports ``correct: false`` counts as
 failed; its pair counts for neither side. ``--jsonl`` appends every
@@ -164,6 +166,12 @@ def report(workload: str, pairs: list[dict[str, dict]], metrics: list[dict]) -> 
                 q1, med, q3 = quartiles(xs)
                 print(f"{m} {s}: median {med:.6g} q1 {q1:.6g} q3 {q3:.6g} "
                       f"(n={len(xs)}; info, not gated)")
+    for s in SIDES:
+        xs = [p[s]["wall_s"] for p in ok if "wall_s" in p[s]]
+        if xs:
+            q1, med, q3 = quartiles(xs)
+            print(f"wall_s {s}: median {med:.1f} q1 {q1:.1f} q3 {q3:.1f} max {max(xs):.1f} "
+                  f"(n={len(xs)}; per process; info, not gated)")
 
 
 def main(argv=None) -> int:

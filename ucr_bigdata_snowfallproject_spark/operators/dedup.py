@@ -86,6 +86,16 @@ def _materialize(df: DataFrame, mode: str = "local", path: str | None = None) ->
       cluster restart and is reusable/inspectable across jobs; also the
       only mode whose result partitioning is stable across retries.
     - ``"none"``: return the plan unchanged (each consumer recomputes).
+
+    What the planner sees of the result's size differs by tier, and it
+    decides the strategy of every join against it. ``"persist"`` once
+    its cache is populated, ``"eager"`` and ``"table"`` report a measured
+    size (the cached blocks, the written files). ``"local"`` and
+    ``"reliable"`` report the optimizer's pre-execution estimate of the
+    plan they replaced, which join estimates multiply: the 457-row
+    connected-components labels of the corpus benchmark at seed 1 report
+    487 PiB. A caller that knows the row count can hint the size itself
+    (:func:`_sized_for_planner`).
     """
     if mode == "none":
         return df
@@ -1613,9 +1623,11 @@ def _materialize_observed(
 
 def _round_counts() -> dict[str, F.Column]:
     """Observed metrics of one label-propagation round over its output
-    ``(u, comp, nbrs, old, nmax)``: ``lowered``, the nodes whose comp the
-    round lowered, and ``unsettled``, the lowered nodes that received a
-    message (a neighbour's old comp or a label link) above the new comp.
+    ``(u, comp, nbrs, old, nmax)``: ``rows``, the state's node count (the
+    size of the labels frame, see :func:`_sized_for_planner`);
+    ``lowered``, the nodes whose comp the round lowered; and
+    ``unsettled``, the lowered nodes that received a message (a
+    neighbour's old comp or a label link) above the new comp.
     When ``unsettled`` is 0 every label is final: a node that kept its
     label held no more than any neighbour's old one, so two such
     neighbours held the same label, and a settled lowered node had all
@@ -1625,6 +1637,7 @@ def _round_counts() -> dict[str, F.Column]:
     itself, without a confirm round."""
     lowered = F.col("comp") < F.col("old")
     return {
+        "rows": F.count(F.lit(1)),
         "lowered": F.coalesce(F.sum(lowered.cast("int")), F.lit(0)),
         "unsettled": F.coalesce(
             F.sum((lowered & (F.col("nmax") > F.col("comp"))).cast("int")), F.lit(0)
@@ -1720,15 +1733,32 @@ def dup_components_iteration_frame(pairs: DataFrame) -> DataFrame:
     return _cc_round(_cc_state(pairs))
 
 
+def _sized_for_planner(df: DataFrame, rows: int) -> DataFrame:
+    """``df`` (``rows`` rows) with a broadcast hint when its size, as
+    Spark estimates a row (an 8-byte row overhead plus each column's
+    ``defaultSize``), fits within the session's
+    ``spark.sql.autoBroadcastJoinThreshold``; otherwise unchanged.
+
+    A checkpointed frame reports the optimizer's pre-execution estimate
+    of the plan it replaced (487 PiB for the 457 labels of the corpus
+    benchmark at seed 1), so a join against it plans a sort-merge that
+    shuffles the other side. The hint hands the planner the measured
+    size instead, and reaches a join through the caller's
+    ``filter``/``select`` (``EliminateResolvedHint`` walks unary nodes).
+    A negative threshold disables broadcasting, and then no hint."""
+    row_bytes = 8 + sum(f.dataType().defaultSize() for f in df._jdf.schema().fields())
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    threshold = conf.autoBroadcastJoinThreshold()
+    if threshold >= 0 and rows * row_bytes <= threshold:
+        return F.broadcast(df)
+    return df
+
+
 def _cc_labels(
     pairs: DataFrame, max_iter: int, checkpoint_mode: str
 ) -> tuple[DataFrame, int]:
     """The loop of :func:`dup_components`; returns ``(labels, rounds)``
     so tests can pin the round count."""
-    spark = pairs.sparkSession
-    spark.sparkContext.setCheckpointDir(
-        spark.conf.get("spark.local.dir", "/tmp") + "/snowfall-cc-checkpoints"
-    )
     # round 1: the state build (the pair upstream runs once, here)
     state, seen = _materialize_observed(
         _cc_state(pairs), checkpoint_mode, **_round_counts()
@@ -1750,7 +1780,8 @@ def _cc_labels(
             f"dup_components did not converge within max_iter={max_iter} "
             "changing rounds (+1 confirm round); raise max_iter."
         )
-    return state.select(F.col("u").alias("id"), "comp"), rounds
+    labels = state.select(F.col("u").alias("id"), "comp")
+    return _sized_for_planner(labels, seen["rows"]), rounds
 
 
 def dup_components(
@@ -1777,6 +1808,14 @@ def dup_components(
     unsettled label ends the loop without a confirm round. ``max_iter``
     bounds the changing rounds (the build counts as round 1); a graph
     that needs more raises ``ValueError``.
+
+    The returned frame carries a broadcast hint when its size (the node
+    count, observed on the last round's action, times Spark's per-row
+    size estimate) fits within ``spark.sql.autoBroadcastJoinThreshold``,
+    so a survivor anti-join ``docs.join(losers, ..., "left_anti")``
+    broadcasts the loser ids from its first plan instead of shuffling
+    every document (see :func:`_sized_for_planner`). A larger label set,
+    or a threshold of -1, gets no hint and the join sort-merges.
 
     Scale notes (SURVEY §7.4): the working frame is materialised and
     lineage-truncated every round (``checkpoint_mode``, see
