@@ -1,7 +1,8 @@
 """Paired A/B summary logic (tools/perfbench_ab.py) — pure Python, no
 Spark: seed parsing, quartiles, the claim rule (the change wins at
-least nine tenths of the pairs and the median gap exceeds the base's
-interquartile range; failed runs count for neither side), the
+least nine tenths of the pairs, the median gap exceeds the base's
+interquartile range, and the change fails no more runs than the base;
+failed runs count for neither side), the
 no-regression verdict per metric, the run length and metric set
 coming from the benchmark's own declaration, and the ungated wall
 timings, per-process wall time included, reported as information
@@ -54,6 +55,26 @@ def test_report_claim_rule(capsys):
     assert "failed runs base=0 change=2" in out
     assert "write_amp change wins 8/10 pairs" in out
     assert "gain claimable: yes" not in out
+
+    # 20 pairs, one failed change run, the other 19 win: 19/20 clears the
+    # nine-tenths bar, but the change failed more runs than the base
+    pairs = [
+        {"base": _rec(write_amp=13.0 + i / 10),
+         "change": _rec(write_amp=6.5 + i / 10)}
+        for i in range(20)
+    ]
+    pairs[0]["change"] = _rec(correct=False)
+    report("w", pairs, METRICS[2:])
+    out = capsys.readouterr().out
+    assert "failed runs base=0 change=1" in out
+    assert "write_amp change wins 19/20 pairs" in out
+    assert "gain claimable: no" in out
+    # the same failure on the base side leaves the claim standing
+    pairs[0] = {"base": _rec(correct=False), "change": _rec(write_amp=6.5)}
+    report("w", pairs, METRICS[2:])
+    out = capsys.readouterr().out
+    assert "write_amp change wins 19/20 pairs" in out
+    assert "gain claimable: yes" in out
 
 
 def test_no_regression_verdicts(capsys):

@@ -620,20 +620,21 @@ def test_round8_md5_twins_no_partitionless_window(spark):
 
 
 def test_headline_queries_not_hollow_under_count(spark):
-    """Round-9 count-plan audit, made permanent: bench.py times
+    """Round-9 count-plan audit, made permanent: the plan audit
+    (``tests/plan_audit.py``) records each query's plan under
     ``df.count()``, and Catalyst legally ELIMINATES a tail join whose
     right side is unique-keyed and unreferenced — three headline queries
     (span coverage, boilerplate removal, fixed histogram) were silently
-    benching scaffold-only plans. Guard: any headline query whose full
+    recording scaffold-only plans. Guard: any headline query whose full
     optimized plan contains a Join must keep a Join under the count
     projection (queries fix this with a trailing filter on a computed
     column Catalyst can't prove, e.g. ``count_col >= 0``)."""
-    import bench
+    import plan_audit
     from ucr_bigdata_snowfallproject_spark.queries import REGISTRY
 
     hollow = []
     oversized = []
-    for name in bench.HEADLINE:
+    for name in plan_audit.HEADLINE:
         fn, _ = REGISTRY[name]
         df = fn(spark, SF_SMOKE)
         full = df._jdf.queryExecution().optimizedPlan().toString()

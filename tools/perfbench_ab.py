@@ -17,8 +17,9 @@ For each workload and side it prints every metric's median and
 quartiles, and per metric:
 
 - the pair win count and whether the change's gain is claimable: it
-  wins at least nine tenths of the pairs and the medians differ by more
-  than the base's interquartile range;
+  wins at least nine tenths of the pairs, the medians differ by more
+  than the base's interquartile range, and the change has no more
+  failed runs than the base;
 - a no-regression verdict: ``within bound`` (the change's median is no
   worse than the base's by more than ``bound`` of it), ``worse``, or
   ``unresolved`` (the base's IQR is wider than ``bound`` of its median
@@ -153,7 +154,8 @@ def report(workload: str, pairs: list[dict[str, dict]], metrics: list[dict]) -> 
             ties += c == b
         q1, bmed, q3 = quartiles(vals["base"])
         gap = sign * (bmed - quartiles(vals["change"])[1])
-        claim = wins >= 0.9 * len(pairs) and gap > q3 - q1
+        claim = (wins >= 0.9 * len(pairs) and gap > q3 - q1
+                 and failed["change"] <= failed["base"])
         print(f"{m} change wins {wins}/{len(pairs)} pairs (ties {ties}); "
               f"median gap {gap:.6g} vs base IQR {q3 - q1:.6g}; "
               f"gain claimable: {'yes' if claim else 'no'}; "

@@ -1476,7 +1476,7 @@ def minhash_candidates(
     # and is a wash inside the six-stage capstones. Eager's reproduced
     # cost is COLD time on a fresh JVM (the populate-count pays
     # Janino/Arrow warmup inside its own job) — amortized per
-    # cluster-session; see OPTIMIZATION_r18.md for the full tables.
+    # cluster-session.
     sig = minhash_signatures_arrow(
         df, id_col, text_col, num_hashes, shingle_n, hash=hash
     )
@@ -1725,11 +1725,12 @@ def dup_components_iteration_frame(pairs: DataFrame) -> DataFrame:
     """The UNTRUNCATED plan of the state build plus one propagation
     round, for plan audits: ``dup_components`` materialises every
     round, so the final frame's plan is a checkpoint-scan stub and
-    the no-cartesian/no-BNLJ greps over ``bench_plans/`` would verify
-    nothing about the query's real shuffles. This composes the SAME
-    :func:`_cc_state` + :func:`_cc_round` the loop runs, unmaterialised,
-    exposing the full shape (candidate self-join upstream included) to
-    ``bench.py --profile``. Audit-only: never executed in the timed path."""
+    the no-cartesian/no-BNLJ checks of the Tier-1 plan audit
+    (``tests/plan_audit.py``) would verify nothing about the query's
+    real shuffles. This composes the SAME :func:`_cc_state` +
+    :func:`_cc_round` the loop runs, unmaterialised, exposing the full
+    shape (candidate self-join upstream included) to that audit.
+    Audit-only: no registry query runs it."""
     return _cc_round(_cc_state(pairs))
 
 

@@ -151,7 +151,8 @@ def _norm_plan_line(line: str) -> str:
 
 def dump_str(df: DataFrame) -> str:
     """``explain('formatted')`` with duplicated cached-plan text elided —
-    the audit-grade dump ``bench.py --profile`` writes."""
+    the audit-grade dump the Tier-1 plan audit (``tests/plan_audit.py``)
+    writes."""
     return dedupe_plan_text(explain_str(df, "formatted"))
 
 

@@ -796,10 +796,10 @@ def dedup_minhash_components_md5_iteration(
     registry entry): the same candidate build + vertex-state build (one
     groupBy over the symmetrised pairs) + ONE label-propagation round
     (one groupBy over state plus neighbour messages), with NO checkpoint
-    truncation, so ``bench.py --profile`` can commit the real per-round
-    shuffle shape next to the post-checkpoint stub the timed query dumps.
-    The no-cartesian/no-BNLJ greps over ``bench_plans/`` audit THIS
-    artifact for the components query."""
+    truncation, so the Tier-1 plan audit (``tests/plan_audit.py``) dumps
+    the real per-round shuffle shape next to the post-checkpoint stub the
+    registry query dumps. Its no-cartesian/no-BNLJ checks audit THIS
+    plan for the components query."""
     d = load_table(spark, sf_dir, "documents")
     # checkpoint_mode="persist" explicitly (ADVICE r17): the kernel's
     # "eager" default runs a Spark job (signature scan + count) at
@@ -1655,7 +1655,7 @@ def curation_span_clean_mix_pipeline(
     # keep the r17 two-build shape. The operator API and its
     # equivalence test stay — at 100 TB, where the corpus scan+hash
     # dominates the barrier write, the shared index is the right call
-    # for user pipelines (see OPTIMIZATION_r18.md).
+    # for user pipelines.
     cov = dedup_ops.span_coverage(train2, "doc_id", "text", min_tokens=12)
     keep_ids = cov.filter(
         2 * F.col("dup_tokens") <= F.col("n_tokens")
@@ -1741,8 +1741,8 @@ def curation_span_clean_mix_pipeline_prod(
     ).select("doc_id")
     train2 = _materialize(train.join(keep0, "doc_id", "left_semi"), "local")
     # Round 18: the shared stage-3/4 anchor scan was measured and
-    # REJECTED at this SF (see the fixture-width twin's note and
-    # OPTIMIZATION_r18.md) — the queries keep the r17 two-build shape.
+    # REJECTED at this SF (see the fixture-width twin's note) — the
+    # queries keep the r17 two-build shape.
     cov = dedup_ops.span_coverage(train2, "doc_id", "text", min_tokens=12)
     keep_ids = cov.filter(
         2 * F.col("dup_tokens") <= F.col("n_tokens")
